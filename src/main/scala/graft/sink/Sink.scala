@@ -83,6 +83,30 @@ private[sink] object SinkChecks {
         s"e.g. ${dup.headOption.map(_.toString).getOrElse("")}; an upsert with duplicate " +
         "source keys would silently persist both copies")
   }
+
+  /** Evaluate a merge's increment ONCE: write it to a durable parquet
+    * stage beside the store, hand `body` the re-read stage, and delete the
+    * stage afterwards, whether `body` succeeded or threw. The increment is
+    * usually a whole job plan (the daily flagship is scans, window dedups
+    * and joins); a merge that consumed it directly would re-run that plan
+    * for every use — key check, anti-join, union — and, with a
+    * nondeterministic plan, each use could even see different rows. The
+    * re-read stage also carries its real file size, so the planner can
+    * broadcast it into the anti-join against the history instead of
+    * shuffling the history to meet it. Durable parquet next to the store,
+    * NOT `localCheckpoint`: checkpointed blocks live unreplicated on
+    * executors with truncated lineage, so at the 100 TB shape one executor
+    * lost between checkpoint and use would fail the whole merge
+    * unrecoverably, and the stage would have to fit executor memory+disk.
+    * A stage left by a crashed merge is never read by the store, and the
+    * next merge overwrites it. */
+  def staged[T](spark: SparkSession, incoming: DataFrame, stage: Path)(body: DataFrame => T): T = {
+    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      incoming.write.mode("overwrite").parquet(stage.toString)
+      body(spark.read.parquet(stage.toString))
+    } finally fs.delete(stage, true)
+  }
 }
 
 private[sink] object CdcOps {
@@ -129,13 +153,20 @@ private[sink] object CdcOps {
   }
 }
 
-/** Offline parquet-backed sink: merge = anti-join existing on the keys,
-  * union the incoming, atomically swap directories. Distributed end to end
-  * (no driver collect); the anti-join shuffles on the merge keys only.
+/** Offline parquet-backed sink: merge = stage the increment, anti-join
+  * existing on the keys, union the staged increment, atomically swap
+  * directories. Distributed end to end (no driver collect). The increment
+  * is evaluated once, into `path__graft_inc` ([[SinkChecks.staged]]); the
+  * key check, the anti-join's key side and the union all scan that stage.
+  * The stage's file size lets the planner broadcast its keys into the
+  * anti-join when the increment is small, so the history is scanned but
+  * not shuffled; a large increment falls back to a shuffle join on the
+  * keys. The first merge into an empty sink publishes the stage itself.
   */
 final class ParquetSink(spark: SparkSession, path: String) extends Sink {
 
   private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def stage = new Path(path + "__graft_inc")
 
   /** A swap interrupted between its two renames leaves the data ONLY at
     * the backup path; restore it before any read/exists decision so the
@@ -154,36 +185,51 @@ final class ParquetSink(spark: SparkSession, path: String) extends Sink {
   def read(): DataFrame = { recoverIfNeeded(); spark.read.parquet(path) }
 
   /** Write `df` to a temp dir next to `path`, then swap — required because
-    * the merge plan reads the same files it replaces. Swap order is
-    * rename-away-then-rename-in (not delete-then-rename): every crash
-    * window leaves either the original or the fully-written temp on disk,
-    * never neither ([[recoverIfNeeded]] heals the only-backup window).
-    * Hadoop `rename` reports failure by returning false, not throwing —
-    * each step is checked so a failed publish can never reach the backup
-    * delete below it. */
+    * the merge plan reads the same files it replaces. */
   private def writeSwap(df: DataFrame): Long = {
     val obs = Observation()
     val tmp = new Path(path + "__graft_tmp")
     df.observe(obs, count(lit(1)).as("rows"))
       .write.mode("overwrite").parquet(tmp.toString)
+    swapIn(tmp)
+    obs.get("rows").asInstanceOf[Long]
+  }
+
+  /** Publish the fully-written dir `src` (the swap temp, or a first
+    * merge's stage) as `path`. Swap order is rename-away-then-rename-in
+    * (not delete-then-rename): every crash window leaves either the
+    * original or the fully-written `src` on disk, never neither
+    * ([[recoverIfNeeded]] heals the only-backup window). A merge's stage
+    * `path__graft_inc` is never part of these windows: it is written and
+    * key-checked before the swap starts, and a crash that leaves it behind
+    * leaves the store itself untouched (the next merge overwrites the
+    * stage). Hadoop `rename` reports failure by returning false, not
+    * throwing — each step is checked so a failed publish can never reach
+    * the backup delete below it. */
+  private def swapIn(src: Path): Unit = {
     val p = new Path(path)
     val backup = new Path(path + "__graft_old")
     if (fs.exists(backup)) fs.delete(backup, true)
     if (fs.exists(p) && !fs.rename(p, backup))
       throw new java.io.IOException(s"sink swap: failed to move $p aside to $backup")
-    if (!fs.rename(tmp, p))
+    if (!fs.rename(src, p))
       throw new java.io.IOException(
-        s"sink swap: failed to publish $tmp to $p (original retained at $backup)")
+        s"sink swap: failed to publish $src to $p (original retained at $backup)")
     fs.delete(backup, true)
-    obs.get("rows").asInstanceOf[Long]
   }
 
   override def mergeByKey(incoming: DataFrame, keys: Seq[String]): Long = {
-    SinkChecks.requireUniqueKeys(incoming, keys, path)
-    val merged =
-      if (!exists) incoming
-      else read().join(incoming, keys, "left_anti").unionByName(incoming)
-    writeSwap(merged)
+    val rows = Observation()
+    SinkChecks.staged(spark, incoming.observe(rows, count(lit(1)).as("rows")), stage) { inc =>
+      SinkChecks.requireUniqueKeys(inc, keys, path)
+      if (exists)
+        writeSwap(read().join(inc.select(keys.map(col): _*), keys, "left_anti").unionByName(inc))
+      else {
+        // Nothing to merge with: the stage already is the new table.
+        swapIn(stage)
+        rows.get("rows").asInstanceOf[Long]
+      }
+    }
   }
 
   override def write(incoming: DataFrame, mode: WriteMode): Long = mode match {
@@ -197,18 +243,19 @@ final class ParquetSink(spark: SparkSession, path: String) extends Sink {
   }
 
   override def applyCdc(changes: DataFrame, keys: Seq[String],
-                        opCol: String, seqCol: String): Long = {
-    val latest = CdcOps.latestChange(changes, keys, opCol, seqCol, path)
-    val upserts = latest.filter(col(opCol) =!= "D").drop(opCol, seqCol)
-    // Deletes need no branch of their own: anti-joining the store on EVERY
-    // latest key drops both updated and deleted rows, and only the
-    // non-delete verdicts come back in via the union.
-    val merged =
-      if (!exists) upserts
-      else read().join(latest.select(keys.map(col): _*), keys, "left_anti")
-        .unionByName(upserts)
-    writeSwap(merged)
-  }
+                        opCol: String, seqCol: String): Long =
+    SinkChecks.staged(spark, changes, stage) { feed =>
+      val latest = CdcOps.latestChange(feed, keys, opCol, seqCol, path)
+      val upserts = latest.filter(col(opCol) =!= "D").drop(opCol, seqCol)
+      // Deletes need no branch of their own: anti-joining the store on EVERY
+      // latest key drops both updated and deleted rows, and only the
+      // non-delete verdicts come back in via the union.
+      val merged =
+        if (!exists) upserts
+        else read().join(latest.select(keys.map(col): _*), keys, "left_anti")
+          .unionByName(upserts)
+      writeSwap(merged)
+    }
 
   /** Versioned CDC apply (see [[CdcOps.versionedNext]]): the store retains
     * op + seq, deletes persist as tombstones, and batches may arrive out
@@ -221,8 +268,10 @@ final class ParquetSink(spark: SparkSession, path: String) extends Sink {
     * compaction policy, exactly like log-structured stores. */
   def applyCdcVersioned(changes: DataFrame, keys: Seq[String],
                         opCol: String = "op", seqCol: String = "seq"): Long =
-    writeSwap(CdcOps.versionedNext(
-      if (exists) Some(read()) else None, changes, keys, opCol, seqCol, path))
+    SinkChecks.staged(spark, changes, stage) { feed =>
+      writeSwap(CdcOps.versionedNext(
+        if (exists) Some(read()) else None, feed, keys, opCol, seqCol, path))
+    }
 }
 
 /** Hive-partitioned parquet sink where Replace is PARTITION-scoped: Spark's
@@ -247,6 +296,7 @@ final class PartitionedParquetSink(spark: SparkSession, path: String,
                                    val partitionCol: String) extends Sink {
 
   private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def stage = new Path(path + "__graft_inc")
   def exists: Boolean = fs.exists(new Path(path))
 
   def read(): DataFrame = spark.read.parquet(path)
@@ -280,42 +330,12 @@ final class PartitionedParquetSink(spark: SparkSession, path: String,
 
   override def mergeByKey(incoming: DataFrame, keys: Seq[String]): Long = {
     requirePartitionCol(incoming)
-    SinkChecks.requireUniqueKeys(incoming, keys, path)
-    if (!exists) return write(incoming, WriteMode.Replace)
-    // Partition-local merge: read only the touched partitions (semi join on
-    // the partition values prunes the scan), keep their non-matching rows,
-    // rewrite just those partitions dynamically.
-    val touched = incoming.select(partitionCol).distinct()
-    val kept = read()
-      .join(broadcast(touched), Seq(partitionCol), "left_semi")
-      .join(incoming, keys, "left_anti")
-    // Stage the merged partitions to a temp directory BEFORE the overwrite
-    // touches any source file — the dynamic-overwrite plan must not read
-    // the path it rewrites (Spark's self-overwrite guard). Durable staging
-    // (parquet next to the output), NOT localCheckpoint: checkpointed
-    // blocks live unreplicated on executors with truncated lineage, so at
-    // the 100 TB shape one executor lost between checkpoint and write
-    // would fail the whole merge unrecoverably, and the touched
-    // partitions would have to fit executor memory+disk. The observation
-    // sits on the UNION (kept + incoming) and is collected by the staging
-    // write, so the return value means "rows written", same as
-    // ParquetSink's swap count.
-    val obs = Observation()
-    val tmp = new Path(path + "__graft_merge_tmp")
-    // The stage is written FLAT (partition col as a data column): staging
-    // partitionBy would re-read the value through directory-name type
-    // inference, which turns a string partition value "2023" into an int
-    // and silently changes the output schema.
-    kept.unionByName(incoming)
-      .observe(obs, count(lit(1)).as("rows"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    try
-      spark.read.parquet(tmp.toString)
-        .write.partitionBy(partitionCol)
-        .mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-    finally fs.delete(tmp, true)
-    obs.get("rows").asInstanceOf[Long]
+    SinkChecks.staged(spark, incoming, stage) { inc =>
+      SinkChecks.requireUniqueKeys(inc, keys, path)
+      if (!exists) write(inc, WriteMode.Replace)
+      else rewriteTouched(inc.select(partitionCol).distinct(),
+        inc.select(keys.map(col): _*), keys, inc)(_ => ())
+    }
   }
 
   /** Partition-local CDC apply: like [[mergeByKey]], only partitions the
@@ -329,32 +349,48 @@ final class PartitionedParquetSink(spark: SparkSession, path: String,
   override def applyCdc(changes: DataFrame, keys: Seq[String],
                         opCol: String, seqCol: String): Long = {
     requirePartitionCol(changes)
-    val latest = CdcOps.latestChange(changes, keys, opCol, seqCol, path)
-    val upserts = latest.filter(col(opCol) =!= "D").drop(opCol, seqCol)
-    if (!exists) return write(upserts, WriteMode.Replace)
-    val touched = latest.select(partitionCol).distinct()
+    SinkChecks.staged(spark, changes, stage) { feed =>
+      val latest = CdcOps.latestChange(feed, keys, opCol, seqCol, path)
+      val upserts = latest.filter(col(opCol) =!= "D").drop(opCol, seqCol)
+      if (!exists) write(upserts, WriteMode.Replace)
+      else {
+        val touched = latest.select(partitionCol).distinct()
+        rewriteTouched(touched, latest.select(keys.map(col): _*), keys, upserts) { merged =>
+          val remaining = merged.select(partitionCol).distinct()
+            .collect().map(_.get(0)).toSet
+          touched.collect().map(_.get(0))
+            .filterNot(remaining).foreach(deletePartition)
+        }
+      }
+    }
+  }
+
+  /** The partition-local rewrite behind [[mergeByKey]] and [[applyCdc]]:
+    * read only the `touched` partitions (the semi join on the partition
+    * values prunes the scan), keep their rows whose keys are not in
+    * `replaced`, add `added`, and dynamic-overwrite just those partitions.
+    * The merged rows are staged first ([[SinkChecks.staged]]) because the
+    * dynamic-overwrite plan must not read the path it rewrites (Spark's
+    * self-overwrite guard). The stage is written FLAT (partition col as a
+    * data column): staging partitionBy would re-read the value through
+    * directory-name type inference, which turns a string partition value
+    * "2023" into an int and silently changes the output schema.
+    * `afterOverwrite` sees the stage before it is deleted. The count is
+    * observed by the staging write, so the return value means "rows
+    * written", same as ParquetSink's swap count. */
+  private def rewriteTouched(touched: DataFrame, replaced: DataFrame, keys: Seq[String],
+                             added: DataFrame)(afterOverwrite: DataFrame => Unit): Long = {
     val kept = read()
       .join(broadcast(touched), Seq(partitionCol), "left_semi")
-      .join(latest.select(keys.map(col): _*), keys, "left_anti")
-    // Same durable flat staging as mergeByKey (see the comments there for
-    // why: self-overwrite guard, executor-loss durability, partition-value
-    // type inference).
-    val obs = Observation()
-    val tmp = new Path(path + "__graft_cdc_tmp")
-    kept.unionByName(upserts)
-      .observe(obs, count(lit(1)).as("rows"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    try {
-      val staged = spark.read.parquet(tmp.toString)
-      staged.write.partitionBy(partitionCol)
-        .mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-      val remaining = staged.select(partitionCol).distinct()
-        .collect().map(_.get(0)).toSet
-      touched.collect().map(_.get(0))
-        .filterNot(remaining).foreach(deletePartition)
-    } finally fs.delete(tmp, true)
-    obs.get("rows").asInstanceOf[Long]
+      .join(replaced, keys, "left_anti")
+    countedWrite(kept.unionByName(added)) { o =>
+      SinkChecks.staged(spark, o, new Path(path + "__graft_merge_tmp")) { merged =>
+        merged.write.partitionBy(partitionCol)
+          .mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .parquet(path)
+        afterOverwrite(merged)
+      }
+    }
   }
 
   /** Drop one partition's directory (`partitionCol=value`) outright —

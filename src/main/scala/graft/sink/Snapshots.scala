@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   * Layout: `root/v{N}/` parquet directories. A commit writes to a temp
   * dir and publishes with ONE directory rename — readers either see the
   * fully-written `v{N}` or nothing; a crash before the rename leaves only
-  * the temp dir, which the next commit clears. Unlike the mutable
+  * the temp dir, which the next commit clears (or a [[commitMerge]]
+  * stage beside the root, which the next merge clears). Unlike the mutable
   * [[ParquetSink]] there is no swap dance: a merge reads the PREVIOUS
   * version's files and writes a NEW directory, so the plan never replaces
   * what it is reading. Single writer assumed (as all sinks here); version
@@ -102,9 +103,14 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     val tmp = new Path(root, "__graft_snap_tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
     df.write.mode("overwrite").parquet(tmp.toString)
+    publish(tmp, next)
+  }
+
+  /** Rename the fully-written dir `src` to version `next`; returns it. */
+  private def publish(src: Path, next: Long): Long = {
     val dest = new Path(root, s"v$next")
-    if (!fs.rename(tmp, dest))
-      throw new java.io.IOException(s"snapshot publish failed: $tmp -> $dest")
+    if (!fs.rename(src, dest))
+      throw new java.io.IOException(s"snapshot publish failed: $src -> $dest")
     next
   }
 
@@ -142,7 +148,6 @@ final class SnapshotStore(spark: SparkSession, root: String) {
       // first), so align to the head's order here instead of pushing that
       // bookkeeping onto every caller.
       val aligned = incoming.select(headSchema.fields.map(f => col(f.name)).toSeq: _*)
-      val next = v + 1
       val tmp = new Path(root, "__graft_snap_tmp")
       if (fs.exists(tmp)) fs.delete(tmp, true)
       aligned.write.mode("overwrite").parquet(tmp.toString)
@@ -150,20 +155,27 @@ final class SnapshotStore(spark: SparkSession, root: String) {
       try out.write(resolvedDirs(v).mkString("", "\n", "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
-      val dest = new Path(root, s"v$next")
-      if (!fs.rename(tmp, dest))
-        throw new java.io.IOException(s"snapshot publish failed: $tmp -> $dest")
-      next
+      publish(tmp, v + 1)
   }
 
   /** Upsert against the latest snapshot, committed as a NEW version —
-    * MERGE with history: every merge stays readable at its version. */
+    * MERGE with history: every merge stays readable at its version. Like
+    * [[ParquetSink.mergeByKey]], the increment is evaluated once, into
+    * `root__graft_inc` ([[SinkChecks.staged]]); the key check, the
+    * anti-join's key side and the union scan that stage, and the first
+    * merge into an empty store publishes the stage itself as v1. The stage
+    * sits beside the root, not in it: a dir under the root would need a
+    * leading underscore to stay clear of version names, and Spark warns on
+    * every read of such a hidden path. */
   def commitMerge(incoming: DataFrame, keys: Seq[String]): Long = {
-    SinkChecks.requireUniqueKeys(incoming, keys, root)
-    latestVersion match {
-      case None    => commit(incoming)
-      case Some(v) =>
-        commit(read(v).join(incoming, keys, "left_anti").unionByName(incoming))
+    val stage = new Path(root + "__graft_inc")
+    SinkChecks.staged(spark, incoming, stage) { inc =>
+      SinkChecks.requireUniqueKeys(inc, keys, root)
+      latestVersion match {
+        case None    => fs.mkdirs(new Path(root)); publish(stage, 1L)
+        case Some(v) =>
+          commit(read(v).join(inc.select(keys.map(col): _*), keys, "left_anti").unionByName(inc))
+      }
     }
   }
 

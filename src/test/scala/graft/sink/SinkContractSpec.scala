@@ -2,8 +2,12 @@ package graft.sink
 
 import graft.TestSpark
 import java.nio.file.Files
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.util.LongAccumulator
 import org.scalatest.funsuite.AnyFunSuite
+import scala.reflect.runtime.universe.TypeTag
 
 /** The Sink trait's behavioral contract, run against every implementation
   * (K2-K4/K6). A future catalog-backed sink (e.g. Iceberg MERGE INTO)
@@ -88,6 +92,65 @@ abstract class SinkContractSpec extends AnyFunSuite {
       Map((2023, "a") -> 1.0, (2023, "b") -> 2.0, (2024, "c") -> 3.0))
   }
 
+  test(s"$sinkName: a merge into a non-empty store evaluates its increment exactly once") {
+    // The increment is the caller's whole plan (the daily flagship is scans,
+    // window dedups and joins). A nondeterministic UDF bumping an
+    // accumulator counts its evaluations: the key check, the anti-join and
+    // the union must all read one staged copy, so they also agree on the
+    // rows even when the caller's plan would not reproduce them.
+    val sink = mkSink(freshPath())
+    sink.mergeByKey(base, Seq("ano", "k"))
+    val (incoming, evals) = MergeFixtures.counted[String](spark.sparkContext
+      .parallelize(Seq((2023, "b", 20.0), (2023, "d", 40.0), (2024, "e", 50.0)), 2)
+      .toDF("ano", "k", "v"), "k")
+    val written = sink.mergeByKey(incoming, Seq("ano", "k"))
+    assert(evals.value == 3L, s"increment evaluated ${evals.value / 3.0} times, not once")
+    assert(written == expectedMergeWritten(keptTouched = 2, incoming = 3, keptUntouched = 0))
+    assert(asMap(readBack(sink)) == Map((2023, "a") -> 1.0, (2023, "b") -> 20.0,
+      (2023, "d") -> 40.0, (2024, "c") -> 3.0, (2024, "e") -> 50.0))
+  }
+
+  test(s"$sinkName: an empty increment stages, merges and leaves the content as it was") {
+    // A day without coupons merges an empty flagship: the stage then holds
+    // no rows, and its read-back must still carry the schema.
+    val sink = mkSink(freshPath())
+    sink.mergeByKey(base, Seq("ano", "k"))
+    sink.mergeByKey(base.filter("k = 'none'"), Seq("ano", "k"))
+    assert(asMap(readBack(sink)) ==
+      Map((2023, "a") -> 1.0, (2023, "b") -> 2.0, (2024, "c") -> 3.0))
+  }
+
+  test(s"$sinkName: a rejected duplicate-keyed merge leaves every file as it was and no stage") {
+    val path = freshPath()
+    val sink = mkSink(path)
+    sink.mergeByKey(base, Seq("ano", "k"))
+    // the listing covers the store's siblings too: stage, temp and backup
+    // dirs all sit next to `path`
+    val parent = new Path(path).getParent.toString
+    val before = MergeFixtures.listing(spark, parent)
+    val dup = Seq((2023, "b", 20.0), (2023, "b", 21.0), (2024, "x", 1.0)).toDF("ano", "k", "v")
+    intercept[IllegalArgumentException] { sink.mergeByKey(dup, Seq("ano", "k")) }
+    assert(MergeFixtures.listing(spark, parent) == before)
+    assert(!MergeFixtures.exists(spark, path + "__graft_inc"))
+    assert(asMap(readBack(sink)) ==
+      Map((2023, "a") -> 1.0, (2023, "b") -> 2.0, (2024, "c") -> 3.0))
+  }
+
+  test(s"$sinkName: a stage left by a crashed merge changes nothing and is removed") {
+    val path = freshPath()
+    val sink = mkSink(path)
+    sink.mergeByKey(base, Seq("ano", "k"))
+    // junk of another schema where the crashed merge left its stage
+    Seq(("junk", true)).toDF("x", "flag").write.parquet(path + "__graft_inc")
+    val incoming = Seq((2023, "b", 20.0), (2024, "d", 40.0)).toDF("ano", "k", "v")
+    assert(sink.mergeByKey(incoming, Seq("ano", "k")) ==
+      expectedMergeWritten(keptTouched = 2, incoming = 2, keptUntouched = 0))
+    assert(asMap(readBack(sink)) == Map((2023, "a") -> 1.0, (2023, "b") -> 20.0,
+      (2024, "c") -> 3.0, (2024, "d") -> 40.0))
+    assert(readBack(sink).columns.toSet == Set("ano", "k", "v"))
+    assert(!MergeFixtures.exists(spark, path + "__graft_inc"))
+  }
+
   test(s"$sinkName: replace swaps content, append accumulates, counts are the written rows") {
     val sink = mkSink(freshPath())
     assert(sink.write(base, WriteMode.Replace) == 3L)
@@ -124,6 +187,33 @@ abstract class SinkContractSpec extends AnyFunSuite {
       .toDF("ano", "k", "v", "op", "seq")
     val e = intercept[IllegalArgumentException] { sink.applyCdc(tie, Seq("ano", "k")) }
     assert(e.getMessage.contains("not unique"))
+  }
+}
+
+/** Shared by the sink and snapshot specs: how a merge's increment is
+  * counted, and what a failed merge must leave on disk. */
+private[sink] object MergeFixtures {
+  /** `df` with column `c` passed through a nondeterministic identity UDF
+    * that counts its calls: the accumulator then equals the number of rows
+    * times the number of times the plan was evaluated. Pass a KEY column:
+    * every use of the increment reads its keys, whereas column pruning
+    * drops a payload column the key check and the anti-join never read. */
+  def counted[T: TypeTag](df: DataFrame, c: String): (DataFrame, LongAccumulator) = {
+    val evals = df.sparkSession.sparkContext.longAccumulator(s"evals of $c")
+    val bump = udf { (v: T) => evals.add(1L); v }.asNondeterministic()
+    (df.withColumn(c, bump(col(c))), evals)
+  }
+
+  private def fs(spark: SparkSession, dir: String) =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  def exists(spark: SparkSession, dir: String): Boolean = fs(spark, dir).exists(new Path(dir))
+
+  /** Every file under `dir` with its length and modification time. */
+  def listing(spark: SparkSession, dir: String): Set[(String, Long, Long)] = {
+    val it = fs(spark, dir).listFiles(new Path(dir), true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
   }
 }
 

@@ -126,6 +126,36 @@ class SnapshotStoreSpec extends AnyFunSuite {
     }
   }
 
+  test("commitMerge into a non-empty store evaluates its increment exactly once") {
+    val st = freshStore()
+    st.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+    val (incoming, evals) = MergeFixtures.counted[Long](spark.sparkContext
+      .parallelize(Seq((2L, "B"), (3L, "c")), 2).toDF("k", "v"), "k")
+    assert(st.commitMerge(incoming, Seq("k")) == 2L)
+    assert(evals.value == 2L, s"increment evaluated ${evals.value / 2.0} times, not once")
+    assert(rows(st.read(2)) == Set((1L, "a"), (2L, "B"), (3L, "c")))
+  }
+
+  test("a rejected commitMerge leaves every file as it was; a crashed merge's stage is harmless") {
+    val st = freshStore()
+    st.commit(Seq((1L, "a")).toDF("k", "v"))
+    val root = st.readLatest().inputFiles.head.split("/v1/").head
+    // the stage sits beside the root, so list the root's parent
+    val parent = new org.apache.hadoop.fs.Path(root).getParent.toString
+    val before = MergeFixtures.listing(spark, parent)
+    intercept[IllegalArgumentException] {
+      st.commitMerge(Seq((2L, "x"), (2L, "y")).toDF("k", "v"), Seq("k"))
+    }
+    assert(MergeFixtures.listing(spark, parent) == before)
+    assert(st.versions == Seq(1L))
+    // junk of another schema where a crashed merge left its stage
+    Seq(("junk", true)).toDF("x", "flag").write.parquet(s"${root}__graft_inc")
+    assert(st.commitMerge(Seq((1L, "A"), (2L, "b")).toDF("k", "v"), Seq("k")) == 2L)
+    assert(rows(st.read(2)) == Set((1L, "A"), (2L, "b")))
+    assert(st.read(2).columns.toSeq == Seq("k", "v"))
+    assert(!MergeFixtures.exists(spark, s"${root}__graft_inc"))
+  }
+
   test("commitReplacePartitions replaces the NULL partition instead of duplicating beside it") {
     val st = freshStore()
     st.commit(Seq((Option.empty[String], "old_null"), (Some("p1"), "old_p1"))
