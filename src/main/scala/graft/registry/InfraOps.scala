@@ -190,27 +190,26 @@ object InfraOps {
     *
     * Batch scripting is what makes the run deterministic: micro-batch i
     * carries every dedup key's i-th copy (row_number by doc_id within the
-    * (fingerprint, fingerprint2) pair), so no batch contains a
-    * within-batch duplicate — the one place where
-    * `dropDuplicatesWithinWatermark` would keep an arbitrary row. The
-    * first-copy batch arrives first, so the stream's first-arrival-wins
-    * contract coincides with min-doc_id-wins, which the DuckDB twin can
-    * compute statically. All rows share one event time, so the watermark
-    * never declares anything late. The driver-side collect is the test
-    * harness feeding the stream (`MemoryStream.addData` takes local rows,
-    * exactly as the streaming specs do), not operator logic — the
-    * admission path under test runs fully distributed. */
+    * (fingerprint, fingerprint2) pair). The first-copy batch arrives
+    * first, so the stream's first-arrival-wins contract coincides with
+    * min-doc_id-wins, which the DuckDB twin can compute statically. The
+    * ingest keeps no streaming state and no watermark, so event time
+    * decides nothing: the store's anti-join alone rejects every later
+    * copy, including the late replay at the end. The collect to local rows
+    * is the test harness feeding the stream (`MemoryStream.addData` takes
+    * local rows, exactly as the streaming specs do), not operator logic —
+    * the admission path under test runs fully distributed. */
   def streamIngestStore(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val root = scratch(spark, sfDir, "st_ingest_store")
     // Deterministic quarter of the corpus: every micro-batch pays fixed
-    // streaming overhead (state-store commits × 32 partitions, checkpoint
-    // writes, a crash-safe store rewrite), so the full corpus made this
-    // the bench's most expensive row (~20 s at sf0.1) while proving
-    // nothing more IN KIND than a quarter does — the scripted dup-rank
-    // batches, watermark eviction, and full replay rejection below are
-    // corpus-size-independent behaviors. Oracle carries the same gate.
+    // streaming overhead (checkpoint writes, the admission anti-join, an
+    // append), so the full corpus made this the bench's most expensive row
+    // (~20 s at sf0.1) while proving nothing more IN KIND than a quarter
+    // does — the scripted dup-rank batches and the full late replay's
+    // rejection below are corpus-size-independent behaviors. Oracle
+    // carries the same gate.
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text").filter(col("doc_id") % 4 === 0)
     val win = org.apache.spark.sql.expressions.Window
@@ -223,40 +222,23 @@ object InfraOps {
     val tLate = java.sql.Timestamp.valueOf("2026-01-01 12:00:00")
     val sink = new ParquetSink(spark, s"$root/store")
     val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
-    // The dedup state is partitioned by spark.sql.shuffle.partitions AT
-    // QUERY START and every micro-batch commits every state partition
-    // (delta files + snapshot bookkeeping), so at the session's 32 the
-    // scripted ~5-batch run spent its time on 160 state commits of a few
-    // hundred rows each — not on data. 4 partitions is plenty for the
-    // row's corpus and is a per-query setting (restored immediately), not
-    // a semantic change: at real scale the state sizing follows the real
-    // ingest rate, exactly as a production streaming job would size it.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    // The conf is captured into each micro-batch's plan as it runs, so it
-    // stays pinned for the stream's whole life and is restored whatever
-    // happens — everything after this row runs at the session's 32.
+    val q = DocStream.ingestToStore(
+      mem.toDF().toDF("doc_id", "ts", "text"), sink, s"$root/ckpt")
     try {
-      val q = DocStream.ingestToStore(
-        mem.toDF().toDF("doc_id", "ts", "text"), sink, s"$root/ckpt")
-      try {
-        byRank.foreach { case (_, rows) =>
-          mem.addData(rows.toSeq.map(r => (r.getLong(0), t0, r.getString(1))))
-          q.processAllAvailable()
-        }
-        // Past-horizon replay — the scenario only the STORE can defend
-        // against. First a watermark advancer 2h ahead (itself a duplicate,
-        // dropped in flight, admits nothing) evicts the t0-keyed dedup
-        // state; then EVERY document re-arrives with a new doc_id and
-        // whitespace-mutated text (same fingerprint). The streaming state is
-        // gone, so each replay reaches the sink's anti-join — which must
-        // reject all of them, or the oracle sees foreign doc_ids.
-        mem.addData(Seq((9000000L, tLate, all.head.getString(1))))
+      byRank.foreach { case (_, rows) =>
+        mem.addData(rows.toSeq.map(r => (r.getLong(0), t0, r.getString(1))))
         q.processAllAvailable()
-        mem.addData(all.toSeq.map(r => (r.getLong(0) + 1000000L, tLate, " " + r.getString(1) + " ")))
-        q.processAllAvailable()
-      } finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
+      // Late replay 2h ahead, which only the STORE can defend against:
+      // first one stored text under a new doc_id, then EVERY document
+      // re-arrives with a new doc_id and whitespace-mutated text (same
+      // fingerprint). Each replay reaches the sink's anti-join — which
+      // must reject all of them, or the oracle sees foreign doc_ids.
+      mem.addData(Seq((9000000L, tLate, all.head.getString(1))))
+      q.processAllAvailable()
+      mem.addData(all.toSeq.map(r => (r.getLong(0) + 1000000L, tLate, " " + r.getString(1) + " ")))
+      q.processAllAvailable()
+    } finally q.stop()
     sink.read().select("doc_id", "fingerprint")
   }
 
@@ -273,13 +255,13 @@ object InfraOps {
     * exactly one slice, so the run commits exactly v1 ⊂ v2 ⊂ v3 and slice
     * membership is statically computable by the DuckDB twin. Everything
     * after must commit NOTHING: per-rank duplicate batches (admission
-    * anti-join hits), then a watermark advance plus a whitespace-mutated
-    * full replay past the horizon (streaming state evicted, so rejection
-    * must come from the HEAD anti-join — and an empty admission must not
-    * burn a version). A wrong version count, a version containing a
-    * replayed doc_id, or churn versions from empty batches all surface as
-    * oracle row mismatches. Same quarter-corpus gate and state-partition
-    * sizing rationale as `st_ingest_store`. */
+    * anti-join hits), then a stored text under a new doc_id plus a
+    * whitespace-mutated full replay, both 2h later (rejection comes from
+    * the HEAD anti-join, the ingest's only gate — and an empty admission
+    * must not burn a version). A wrong version count, a version containing
+    * a replayed doc_id, or churn versions from empty batches all surface
+    * as oracle row mismatches. Same quarter-corpus gate as
+    * `st_ingest_store`. */
   def streamIngestSnapshots(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -295,29 +277,25 @@ object InfraOps {
     val tLate = java.sql.Timestamp.valueOf("2026-01-01 12:00:00")
     val store = new graft.sink.SnapshotStore(spark, s"$root/snaps")
     val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    val q = DocStream.ingestToSnapshots(
+      mem.toDF().toDF("doc_id", "ts", "text"), store, s"$root/ckpt")
     try {
-      val q = DocStream.ingestToSnapshots(
-        mem.toDF().toDF("doc_id", "ts", "text"), store, s"$root/ckpt")
-      try {
-        (0 until 3).foreach { slice =>
-          val rows = all.filter(r => r.getInt(2) == 1 && (r.getLong(0) / 4) % 3 == slice)
-          mem.addData(rows.toSeq.map(r => (r.getLong(0), t0, r.getString(1))))
-          q.processAllAvailable()
-        }
-        val maxRk = all.map(_.getInt(2)).max
-        (2 to maxRk).foreach { rk =>
-          val rows = all.filter(_.getInt(2) == rk)
-          mem.addData(rows.toSeq.map(r => (r.getLong(0), t0, r.getString(1))))
-          q.processAllAvailable()
-        }
-        mem.addData(Seq((9000000L, tLate, all.head.getString(1))))
+      (0 until 3).foreach { slice =>
+        val rows = all.filter(r => r.getInt(2) == 1 && (r.getLong(0) / 4) % 3 == slice)
+        mem.addData(rows.toSeq.map(r => (r.getLong(0), t0, r.getString(1))))
         q.processAllAvailable()
-        mem.addData(all.toSeq.map(r => (r.getLong(0) + 1000000L, tLate, " " + r.getString(1) + " ")))
+      }
+      val maxRk = all.map(_.getInt(2)).max
+      (2 to maxRk).foreach { rk =>
+        val rows = all.filter(_.getInt(2) == rk)
+        mem.addData(rows.toSeq.map(r => (r.getLong(0), t0, r.getString(1))))
         q.processAllAvailable()
-      } finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
+      mem.addData(Seq((9000000L, tLate, all.head.getString(1))))
+      q.processAllAvailable()
+      mem.addData(all.toSeq.map(r => (r.getLong(0) + 1000000L, tLate, " " + r.getString(1) + " ")))
+      q.processAllAvailable()
+    } finally q.stop()
     store.versions
       .map(v => store.read(v).select(lit(v).as("version"), col("doc_id"), col("fingerprint")))
       .reduce(_ unionByName _)

@@ -17,12 +17,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * at 100 TB/day that is the difference between a state store of hashes
   * and one holding the corpus itself.
   *
-  * State is bounded by `dropDuplicatesWithinWatermark`: a fingerprint is
-  * remembered only until the watermark passes its event time + the
-  * watermark delay, so state size ≈ ingest rate × watermark horizon.
-  * (Exactly-once *forever* dedup needs a keyed external store — that is
-  * the [[graft.sink.ParquetSink.mergeByKey]] path, Iceberg MERGE in
-  * production.)
+  * Two shapes share that key. [[dedupedIngest]] is the standalone
+  * streaming operator: its state is bounded by
+  * `dropDuplicatesWithinWatermark` — a fingerprint is remembered only
+  * until the watermark passes its event time + the watermark delay, so
+  * state size ≈ ingest rate × watermark horizon, and events behind the
+  * watermark are dropped as late. The store-backed ingests
+  * ([[ingestToStore]], [[ingestToSnapshots]]) keep NO streaming state:
+  * the store's admission anti-join is their sole dedup gate, so their
+  * dedup is exactly-once for the store's whole life (Iceberg MERGE in
+  * production), late documents are admitted when their text is new, and
+  * the query runs no state store, no watermark and no no-data batch.
   */
 object DocStream {
 
@@ -73,112 +78,109 @@ object DocStream {
       .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_copies"))
       .select("doc_id", "fingerprint", "fingerprint2", "n_copies")
 
-  /** End-to-end streaming ingest INTO the corpus store: watermarked exact
-    * dedup ([[dedupedIngest]]) composed with an anti-join-gated APPEND via
-    * `foreachBatch` — the streaming twin of the reference's daily MERGE
-    * INTO job (`etl_job.py:78-85`), with the store itself as the durable
-    * dedup authority: `dropDuplicatesWithinWatermark` bounds in-flight
-    * state to the horizon, and the admission anti-join (on the
-    * fingerprint pair) makes duplicates that re-arrive AFTER the horizon
-    * idempotent no-ops instead of re-inserts. Micro-batch replays after a
-    * crash re-admit nothing — no-ops, so the store sees effectively-once
-    * ingest on at-least-once delivery.
+  /** End-to-end streaming ingest INTO the corpus store: an
+    * anti-join-gated APPEND via `foreachBatch` — the streaming twin of the
+    * reference's daily MERGE INTO job (`etl_job.py:78-85`), with the store
+    * itself as the sole dedup authority. Each micro-batch keeps its
+    * smallest doc_id per fingerprint, then anti-joins the store's
+    * fingerprints away: first arrival wins whenever the copies arrive.
+    * There is no streaming state to duplicate that decision —
+    * `foreachBatch` commits synchronously, so by batch N+1 every
+    * fingerprint batch N admitted is already in the store — hence no
+    * watermark: a LATE document is admitted if its text is new and
+    * rejected if its text is stored, like any other. Micro-batch replays
+    * after a crash re-admit nothing — no-ops, so the store sees
+    * effectively-once ingest on at-least-once delivery.
     *
     * Returns the started query; the caller owns `awaitTermination`/`stop`.
     * Scale: each micro-batch is one anti-join against the store's keys
     * plus an O(batch) parquet append — per-batch write cost tracks the
     * BATCH, never the store (the former keyed-merge shape re-read and
     * rewrote the whole store per trigger). */
-  def ingestToStore(docs: DataFrame, sink: graft.sink.Sink,
-                    checkpoint: String, watermark: String = "1 hour") =
-    dedupedIngest(docs, watermark)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // Within-batch same-fingerprint rows exist only across watermark
-        // horizons (inside one horizon dedupedIngest dropped them): keep
-        // the smallest doc_id deterministically. Then FIRST-ARRIVAL-WINS
-        // against the store: mergeByKey alone would update on match
-        // (last-wins — the reference's MERGE semantic, right for facts,
-        // wrong for dedup provenance), so already-stored fingerprints are
-        // anti-joined away and the merge only ever inserts.
-        val once = graft.core.Dedup.top1PerKey(
-          batch.toDF(), Seq("fingerprint"), Seq(col("doc_id").asc))
-        // `exists` (not a swallowed Try): an absent store is the expected
-        // first batch, but a FAILED read of an existing store must fail the
-        // micro-batch so the checkpoint retries — treating it as empty
-        // would re-insert stored fingerprints and break first-arrival-wins.
-        val fresh =
-          if (sink.exists)
-            once.join(sink.read().select("fingerprint"), Seq("fingerprint"), "left_anti")
-          else once
-        // APPEND, not mergeByKey (r15 optimization, guide §1.2 "remove
-        // passes"): the anti-join above already guarantees fresh's keys are
-        // disjoint from the store's, so the keyed merge degenerates to
-        // store ∪ fresh — but mergeByKey pays a SECOND store read, a
-        // key-uniqueness probe job (top1PerKey already constructs
-        // uniqueness), and an O(store) rewrite-and-swap EVERY micro-batch
-        // (even an all-duplicates replay batch rewrote the whole store for
-        // zero admissions). A parquet append moves O(batch) bytes instead —
-        // the difference between per-batch cost tracking the STORE and
-        // tracking the BATCH, which is what makes the shape deployable on a
-        // continuously-growing corpus. Replay safety is unchanged (the
-        // guarantee was always the anti-join, never the merge): a
-        // checkpoint-replayed batch re-admits nothing, and a crash that
-        // half-commits an append self-heals — the visible rows' keys filter
-        // out on replay, the lost ones re-admit and re-append.
-        sink.write(fresh, graft.sink.WriteMode.Append): Unit
-      }
-      .start()
+  def ingestToStore(docs: DataFrame, sink: graft.sink.Sink, checkpoint: String) =
+    admitBatches(docs, checkpoint) { once =>
+      // `exists` (not a swallowed Try): an absent store is the expected
+      // first batch, but a FAILED read of an existing store must fail the
+      // micro-batch so the checkpoint retries — treating it as empty
+      // would re-insert stored fingerprints and break first-arrival-wins.
+      val fresh =
+        if (sink.exists)
+          once.join(sink.read().select("fingerprint"), Seq("fingerprint"), "left_anti")
+        else once
+      // APPEND, not mergeByKey (r15 optimization, guide §1.2 "remove
+      // passes"): mergeByKey alone would update on match (last-wins — the
+      // reference's MERGE semantic, right for facts, wrong for dedup
+      // provenance), and the anti-join above already guarantees fresh's
+      // keys are disjoint from the store's, so the keyed merge degenerates
+      // to store ∪ fresh — but mergeByKey pays a SECOND store read, a
+      // key-uniqueness probe job (top1PerKey already constructs
+      // uniqueness), and an O(store) rewrite-and-swap EVERY micro-batch
+      // (even an all-duplicates replay batch rewrote the whole store for
+      // zero admissions). A parquet append moves O(batch) bytes instead —
+      // the difference between per-batch cost tracking the STORE and
+      // tracking the BATCH, which is what makes the shape deployable on a
+      // continuously-growing corpus. Replay safety is unchanged (the
+      // guarantee was always the anti-join, never the merge): a
+      // checkpoint-replayed batch re-admits nothing, and a crash that
+      // half-commits an append self-heals — the visible rows' keys filter
+      // out on replay, the lost ones re-admit and re-append.
+      sink.write(fresh, graft.sink.WriteMode.Append): Unit
+    }
 
   /** Streaming ingest → SNAPSHOT lineage: like [[ingestToStore]] but the
     * durable side is a [[graft.sink.SnapshotStore]] — every micro-batch
     * that admits rows commits a new immutable version, so the corpus's
     * ingestion history stays time-travelable (what did training read last
     * Tuesday?) instead of being overwritten in place. Same
-    * first-arrival-wins admission: in-flight dedup inside the watermark
-    * horizon, then an anti-join against the CURRENT head so re-arrivals
-    * past the horizon never re-insert. Empty admissions commit nothing —
+    * first-arrival-wins admission with the same sole gate: the smallest
+    * doc_id per fingerprint within the batch, then an anti-join against
+    * the CURRENT head — no streaming state, no watermark, so late
+    * documents with a new text are admitted and re-arrivals of a stored
+    * text never re-insert, however late. Empty admissions commit nothing —
     * idle stream, no version churn. At-least-once caveat, documented
     * rather than hidden: a crash-replayed batch re-admits zero rows
     * (they're in the head already) and thus creates no version, EXCEPT
     * when the crash hit between admission and checkpoint — that replay
     * creates one duplicate-content version, which is content-safe and
     * visible in the lineage. */
-  def ingestToSnapshots(docs: DataFrame, store: graft.sink.SnapshotStore,
-                        checkpoint: String, watermark: String = "1 hour") =
-    dedupedIngest(docs, watermark)
+  def ingestToSnapshots(docs: DataFrame, store: graft.sink.SnapshotStore, checkpoint: String) =
+    admitBatches(docs, checkpoint) { once =>
+      // Persisted for the batch's lifetime: the admission plan (dedup +
+      // anti-join vs the head snapshot) is otherwise recomputed by the
+      // isEmpty probe AND the commit write — two head-snapshot rescans per
+      // trigger on the streaming hot path.
+      val fresh = store.latestVersion
+        .map(v => once.join(store.read(v).select("fingerprint"), Seq("fingerprint"), "left_anti"))
+        .getOrElse(once)
+        .persist()
+      // commitAppend, not commit(head ∪ fresh) (r16 optimization,
+      // completing r15's O(batch) ingest work): the admission anti-join
+      // above already made fresh's keys disjoint from the head, so the
+      // new version's CONTENT is exactly head ∪ fresh either way — but
+      // the full-copy commit rewrote everything ever ingested per
+      // committing trigger (the last O(history) cost on the streaming
+      // path), where the delta commit writes the BATCH plus a manifest
+      // and read(v) reconstructs the union behind the same API. Time
+      // travel, diff and expiry are unchanged (expire materializes
+      // survivors that inherit expiring dirs — see SnapshotStore).
+      try {
+        if (!fresh.isEmpty) store.commitAppend(fresh): Unit
+      }
+      finally { fresh.unpersist(blocking = false): Unit }
+    }
+
+  /** The store-backed ingests' shared query: fingerprint every document
+    * and hand each micro-batch, reduced to its smallest doc_id per
+    * fingerprint (deterministic, whatever the batch's row order), to
+    * `admit`, which gates it against the store. Stateless: no watermark,
+    * no state store, so a trigger runs exactly one batch. */
+  private def admitBatches(docs: DataFrame, checkpoint: String)(admit: DataFrame => Unit) =
+    withFingerprint(docs).select("doc_id", "ts", "text", "fingerprint")
       .writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val once = graft.core.Dedup.top1PerKey(
-          batch.toDF(), Seq("fingerprint"), Seq(col("doc_id").asc))
-        // Persisted for the batch's lifetime: the admission plan (dedup +
-        // anti-join vs the head snapshot) is otherwise recomputed by the
-        // isEmpty probe, the merge's key check, AND the commit write —
-        // three head-snapshot rescans per trigger on the streaming hot
-        // path, growing with every version.
-        val head = store.latestVersion
-        val fresh = head
-          .map(v => once.join(store.read(v).select("fingerprint"), Seq("fingerprint"), "left_anti"))
-          .getOrElse(once)
-          .persist()
-        // commitAppend, not commit(head ∪ fresh) (r16 optimization,
-        // completing r15's O(batch) ingest work): the admission anti-join
-        // above already made fresh's keys disjoint from the head, so the
-        // new version's CONTENT is exactly head ∪ fresh either way — but
-        // the full-copy commit rewrote everything ever ingested per
-        // committing trigger (the last O(history) cost on the streaming
-        // path), where the delta commit writes the BATCH plus a manifest
-        // and read(v) reconstructs the union behind the same API. Time
-        // travel, diff and expiry are unchanged (expire materializes
-        // survivors that inherit expiring dirs — see SnapshotStore).
-        try {
-          if (!fresh.isEmpty) store.commitAppend(fresh): Unit
-        }
-        finally { fresh.unpersist(blocking = false): Unit }
+        admit(graft.core.Dedup.top1PerKey(batch.toDF(), Seq("fingerprint"), Seq(col("doc_id").asc)))
       }
       .start()
 

@@ -3,7 +3,8 @@ package graft.streaming
 import graft.TestSpark
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.scalatest.funsuite.AnyFunSuite
 
 class DocStreamSpec extends AnyFunSuite {
@@ -108,17 +109,15 @@ class DocStreamSpec extends AnyFunSuite {
       mem.addData((1L, ts(0), "alpha beta"), (2L, ts(1), "gamma delta"))
       q.processAllAvailable()
       assert(storeIds == Set(1L, 2L))
-      // cross-batch duplicate INSIDE the watermark horizon: dropped by the
-      // in-flight dedup state, never reaches the sink
+      // cross-batch duplicate: the store's anti-join rejects it
       mem.addData((3L, ts(2), " alpha  beta "), (4L, ts(3), "epsilon zeta"))
       q.processAllAvailable()
       assert(storeIds == Set(1L, 2L, 4L))
-      // advance the watermark past doc 1's ts + horizon so its in-flight
-      // fingerprint state is EVICTED...
+      // two hours on, past any one-hour watermark horizon: the ingest keeps
+      // no streaming state, so a re-send of doc 1's content reaches the
+      // store, and only the store-level anti-join can keep first-wins
       mem.addData((10L, Timestamp.valueOf("2026-01-01 11:00:00"), "unrelated content here"))
       q.processAllAvailable()
-      // ...then re-send doc 1's content: the stream re-emits it (state is
-      // gone), and only the store-level anti-join can keep first-wins
       mem.addData((5L, Timestamp.valueOf("2026-01-01 11:30:00"), "alpha beta"))
       q.processAllAvailable()
       assert(storeIds == Set(1L, 2L, 4L, 10L), s"late duplicate re-inserted: $storeIds")
@@ -147,6 +146,70 @@ class DocStreamSpec extends AnyFunSuite {
       // time travel: v1 is exactly the first batch, unmutated
       assert(ids(1) == Set(1L, 2L))
     } finally q.stop()
+  }
+
+  /** A started store-backed ingest: `send` adds one micro-batch and waits
+    * for it, `ids` reads the stored doc_ids back. */
+  private final case class Ingest(send: Seq[(Long, Timestamp, String)] => Unit,
+                                  ids: () => Set[Long], q: StreamingQuery, checkpoint: String)
+
+  /** Both store-backed ingests, each started on a fresh store under `root`
+    * with its reader of the stored doc_ids. */
+  private val storeIngests: Seq[(String, (DataFrame, String) => (StreamingQuery, () => Set[Long]))] = Seq(
+    "ingestToStore" -> { (docs, root) =>
+      val sink = new graft.sink.ParquetSink(spark, s"$root/store")
+      (DocStream.ingestToStore(docs, sink, s"$root/ckpt"),
+        () => sink.read().select("doc_id").collect().map(_.getLong(0)).toSet)
+    },
+    "ingestToSnapshots" -> { (docs, root) =>
+      val store = new graft.sink.SnapshotStore(spark, s"$root/store")
+      (DocStream.ingestToSnapshots(docs, store, s"$root/ckpt"),
+        () => store.readLatest().select("doc_id").collect().map(_.getLong(0)).toSet)
+    })
+
+  for ((name, start) <- storeIngests) {
+    def withIngest(body: Ingest => Unit): Unit = {
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      val root = java.nio.file.Files.createTempDirectory("graft_ingest_gate").toString
+      val mem = MemoryStream[(Long, Timestamp, String)]
+      val (q, ids) = start(mem.toDF().toDF("doc_id", "ts", "text"), root)
+      try body(Ingest(rows => { mem.addData(rows); q.processAllAvailable() }, ids, q, s"$root/ckpt"))
+      finally q.stop()
+    }
+
+    test(s"$name: stateless query, one micro-batch per trigger and no state in the checkpoint") {
+      withIngest { in =>
+        in.send(Seq((1L, ts(0), "alpha beta"), (2L, ts(1), "gamma delta")))
+        in.send(Seq((3L, ts(2), " alpha  beta "), (4L, ts(3), "epsilon zeta")))
+        // two hours on: past the one-hour horizon a watermark would have
+        in.send(Seq((5L, Timestamp.valueOf("2026-01-01 11:30:00"), "eta theta")))
+        // a stateful query would follow each event-time advance with a
+        // no-data batch; idle triggers report progress without "addBatch"
+        val batches = in.q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
+        assert(batches.map(_.batchId).toSeq == Seq(0L, 1L, 2L),
+          s"batches ${batches.map(p => (p.batchId, p.numInputRows)).mkString(", ")}")
+        assert(batches.forall(_.stateOperators.isEmpty))
+        assert(!new java.io.File(s"${in.checkpoint}/state").exists, "the checkpoint holds streaming state")
+        assert(in.ids() == Set(1L, 2L, 4L, 5L))
+      }
+    }
+
+    test(s"$name: two exact copies inside one batch admit the smaller doc_id") {
+      withIngest { in =>
+        in.send(Seq((7L, ts(0), "same text here"), (5L, ts(0), "same text here"), (6L, ts(1), "other text")))
+        assert(in.ids() == Set(5L, 6L))
+      }
+    }
+
+    test(s"$name: a late document is admitted if its text is new, rejected if it is stored") {
+      withIngest { in =>
+        in.send(Seq((1L, Timestamp.valueOf("2026-01-01 11:00:00"), "alpha beta")))
+        // two hours older than the newest event time
+        in.send(Seq((2L, ts(0), "late but new"), (3L, ts(0), " alpha beta ")))
+        assert(in.ids() == Set(1L, 2L))
+      }
+    }
   }
 
   test("streaming LSH near-dup: pairs match the batch twin, including cross-batch pairs") {
