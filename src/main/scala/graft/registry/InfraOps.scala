@@ -30,6 +30,16 @@ object InfraOps {
     dir.toString
   }
 
+  /** Run `body` with the session confs `pairs` set, then restore each
+    * key's previous value, whether `body` succeeded or threw. For the
+    * streaming rows, whose per-query settings must not leak into the rows
+    * that run after them in the same session. */
+  private def withConfs[T](spark: SparkSession, pairs: (String, String)*)(body: => T): T = {
+    val prev = pairs.map { case (k, _) => k -> spark.conf.get(k) }
+    try { pairs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+    finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   /** K2 round-trip: merge two overlapping keyed batches; final state =
     * batch2 rows + batch1 rows whose key batch2 didn't touch. */
   def mergeRoundTrip(spark: SparkSession, sfDir: String): DataFrame = {
@@ -330,9 +340,7 @@ object InfraOps {
       .filter(col("c_custkey") % 3 =!= 0)
       .select(col("c_custkey").as("user_id"), col("c_name"), col("c_nationkey"))
     val mem = MemoryStream[(Long, java.time.LocalDateTime, Long, String, Double)]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    withConfs(spark, "spark.sql.shuffle.partitions" -> "4") {
       val enriched = EventStream.enrich(
         mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value"),
         dim, "user_id")
@@ -344,7 +352,7 @@ object InfraOps {
           q.processAllAvailable()
         }
       } finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     spark.table("graft_st_enrich")
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
         col("c_name"), col("c_nationkey"))
@@ -389,8 +397,6 @@ object InfraOps {
     val rMem = MemoryStream[(Long, java.time.LocalDateTime, Long, String, Double)]
     def df(m: MemoryStream[(Long, java.time.LocalDateTime, Long, String, Double)]) =
       m.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     // r15 optimization: no-data micro-batches exist to evict state and
     // emit watermark-gated OUTER-side results while input is idle — an
     // INNER-append join emits only on data, so each scripted slice was
@@ -399,12 +405,11 @@ object InfraOps {
     // Admission is unchanged (a data batch's watermark derives from the
     // PREVIOUS data batch either way), so the output is row-identical —
     // oracle re-verified; state merely lives until the next data batch,
-    // which for this bounded replay is the next slice. Per-query setting,
-    // restored in the finally below; the library operator keeps the
-    // default (production idle streams may want idle-time cleanup).
-    val prevNoData = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
+    // which for this bounded replay is the next slice. Per-query setting;
+    // the library operator keeps the default (production idle streams may
+    // want idle-time cleanup).
+    withConfs(spark, "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
       val joined = EventStream.streamStreamJoin(df(lMem), df(rMem),
         maxDelaySeconds = 21600)
       val q = joined.writeStream.format("memory").queryName("graft_st_joined")
@@ -416,9 +421,6 @@ object InfraOps {
           q.processAllAvailable()
         }
       } finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
     }
     // UTC-pinned session makes the TZ→NTZ cast value-preserving; emit NTZ
     // so the parquet dump hash-matches DuckDB's plain TIMESTAMP.

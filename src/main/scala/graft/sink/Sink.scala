@@ -1,5 +1,6 @@
 package graft.sink
 
+import graft.sources.ParquetMeta
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -104,7 +105,7 @@ private[sink] object SinkChecks {
     val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
       incoming.write.mode("overwrite").parquet(stage.toString)
-      body(spark.read.parquet(stage.toString))
+      body(ParquetMeta.read(spark, stage.toString))
     } finally fs.delete(stage, true)
   }
 }
@@ -182,7 +183,7 @@ final class ParquetSink(spark: SparkSession, path: String) extends Sink {
 
   def exists: Boolean = { recoverIfNeeded(); fs.exists(new Path(path)) }
 
-  def read(): DataFrame = { recoverIfNeeded(); spark.read.parquet(path) }
+  def read(): DataFrame = { recoverIfNeeded(); ParquetMeta.read(spark, path) }
 
   /** Write `df` to a temp dir next to `path`, then swap — required because
     * the merge plan reads the same files it replaces. */
@@ -299,7 +300,7 @@ final class PartitionedParquetSink(spark: SparkSession, path: String,
   private def stage = new Path(path + "__graft_inc")
   def exists: Boolean = fs.exists(new Path(path))
 
-  def read(): DataFrame = spark.read.parquet(path)
+  def read(): DataFrame = ParquetMeta.read(spark, path)
 
   private def requirePartitionCol(df: DataFrame): Unit =
     require(df.columns.contains(partitionCol),

@@ -1,7 +1,8 @@
 package graft.sink
 
+import graft.sources.ParquetMeta
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Versioned snapshot store with time travel on plain parquet — the
@@ -82,8 +83,9 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     val dirs = resolvedDirs(version).map(n => new Path(root, n).toString)
     // One multi-root parquet relation, not a union-per-dir plan: the scan
     // stays a single file-source node however long the append chain, so
-    // plan size is O(1) in versions (the listing is O(dirs)).
-    spark.read.parquet(dirs: _*)
+    // plan size is O(1) in versions (the listing is O(dirs)). The schema is
+    // read from one footer on the driver, so building the read runs no job.
+    ParquetMeta.read(spark, dirs: _*)
   }
 
   def readLatest(): DataFrame = latestVersion match {
@@ -100,10 +102,16 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * there, front the store with a manifest/catalog commit instead. */
   def commit(df: DataFrame): Long = {
     val next = latestVersion.getOrElse(0L) + 1
+    publish(writeTemp(df), next)
+  }
+
+  /** Write `df` to the commit temp dir, clearing a crashed commit's
+    * leftover first; returns the temp dir. */
+  private def writeTemp(df: DataFrame): Path = {
     val tmp = new Path(root, "__graft_snap_tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
     df.write.mode("overwrite").parquet(tmp.toString)
-    publish(tmp, next)
+    tmp
   }
 
   /** Rename the fully-written dir `src` to version `next`; returns it. */
@@ -126,16 +134,25 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * in [[graft.streaming.DocStream.ingestToSnapshots]]); content-wise
     * the new version is exactly `commit(read(head).unionByName(incoming))`.
     *
+    * `incoming` is evaluated once, by the temp write, which also counts
+    * its rows (an `Observation`, no extra job). An empty increment
+    * publishes nothing: the temp is removed and the result is None, like
+    * [[commitDeletePartition]] on an empty store, so an idle stream burns
+    * no versions and the caller needs no emptiness probe of its own.
+    * Otherwise the result is the new version, and on an empty store that
+    * version is a plain v1 with no manifest.
+    *
     * Multi-dir reconstruction requires ONE schema across the chain, so
     * the incoming frame must match the head's column names, types and
-    * order exactly (checked here, metadata-only); anything else is a
-    * schema evolution — use [[commit]], which materializes. Time travel,
-    * [[diff]], [[rollback]] are unchanged (all go through [[read]]);
-    * [[expire]] first materializes any surviving version that inherits
-    * an expiring dir, so history loss stays impossible. */
-  def commitAppend(incoming: DataFrame): Long = latestVersion match {
-    case None => commit(incoming)
-    case Some(v) =>
+    * order exactly (checked here against the head's footer schema, on the
+    * driver); anything else is a schema evolution — use [[commit]], which
+    * materializes. Time travel, [[diff]], [[rollback]] are unchanged (all
+    * go through [[read]]); [[expire]] first materializes any surviving
+    * version that inherits an expiring dir, so history loss stays
+    * impossible. */
+  def commitAppend(incoming: DataFrame): Option[Long] = {
+    val head = latestVersion
+    val aligned = head.fold(incoming) { v =>
       val headSchema = read(v).schema
       def shape(s: org.apache.spark.sql.types.StructType) =
         s.fields.map(f => (f.name.toLowerCase, f.dataType)).sortBy(_._1).toSeq
@@ -147,15 +164,20 @@ final class SnapshotStore(spark: SparkSession, root: String) {
       // projections upstream reorder freely (an anti-join moves its key
       // first), so align to the head's order here instead of pushing that
       // bookkeeping onto every caller.
-      val aligned = incoming.select(headSchema.fields.map(f => col(f.name)).toSeq: _*)
-      val tmp = new Path(root, "__graft_snap_tmp")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      aligned.write.mode("overwrite").parquet(tmp.toString)
-      val out = fs.create(new Path(tmp, ManifestFile), true)
-      try out.write(resolvedDirs(v).mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      publish(tmp, v + 1)
+      incoming.select(headSchema.fields.map(f => col(f.name)).toSeq: _*)
+    }
+    val rows = Observation()
+    val tmp = writeTemp(aligned.observe(rows, count(lit(1)).as("rows")))
+    if (rows.get("rows").asInstanceOf[Long] == 0L) { fs.delete(tmp, true); None }
+    else {
+      head.foreach { v =>
+        val out = fs.create(new Path(tmp, ManifestFile), true)
+        try out.write(resolvedDirs(v).mkString("", "\n", "\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        finally out.close()
+      }
+      Some(publish(tmp, head.getOrElse(0L) + 1))
+    }
   }
 
   /** Upsert against the latest snapshot, committed as a NEW version —

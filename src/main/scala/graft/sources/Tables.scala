@@ -11,20 +11,21 @@ import java.time.format.DateTimeFormatter
   * All reads are plain vectorized parquet scans: Catalyst pushes filters and
   * prunes columns into the scan automatically, so downstream operators only
   * pay for what they reference (verify with `.explain`: `PushedFilters`,
-  * `ReadSchema`).
+  * `ReadSchema`). Schemas come from one footer read on the driver
+  * ([[ParquetMeta.read]]), so building a source runs no Spark job.
   */
 object Tables {
 
   /** S1: schema-inferred parquet scan of one star-schema table. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     GraftSession.applyDefaults(spark)
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    ParquetMeta.read(spark, s"$sfDir/$name.parquet")
   }
 
   /** S1/S4: schema-inferred scan of an arbitrary configured path. */
   def pathScan(spark: SparkSession, path: String): DataFrame = {
     GraftSession.applyDefaults(spark)
-    spark.read.parquet(path)
+    ParquetMeta.read(spark, path)
   }
 
   /** `events.ts` has shipped as either parquet TIMESTAMP(NANOS) — which
@@ -89,6 +90,6 @@ object Tables {
     val existing = paths.filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
     require(existing.nonEmpty,
       s"no day files exist under $bucket/$system in [$start, $end]")
-    spark.read.parquet(existing: _*)
+    ParquetMeta.read(spark, existing: _*)
   }
 }

@@ -145,14 +145,9 @@ object DocStream {
     * visible in the lineage. */
   def ingestToSnapshots(docs: DataFrame, store: graft.sink.SnapshotStore, checkpoint: String) =
     admitBatches(docs, checkpoint) { once =>
-      // Persisted for the batch's lifetime: the admission plan (dedup +
-      // anti-join vs the head snapshot) is otherwise recomputed by the
-      // isEmpty probe AND the commit write — two head-snapshot rescans per
-      // trigger on the streaming hot path.
       val fresh = store.latestVersion
         .map(v => once.join(store.read(v).select("fingerprint"), Seq("fingerprint"), "left_anti"))
         .getOrElse(once)
-        .persist()
       // commitAppend, not commit(head ∪ fresh) (r16 optimization,
       // completing r15's O(batch) ingest work): the admission anti-join
       // above already made fresh's keys disjoint from the head, so the
@@ -162,11 +157,10 @@ object DocStream {
       // path), where the delta commit writes the BATCH plus a manifest
       // and read(v) reconstructs the union behind the same API. Time
       // travel, diff and expiry are unchanged (expire materializes
-      // survivors that inherit expiring dirs — see SnapshotStore).
-      try {
-        if (!fresh.isEmpty) store.commitAppend(fresh): Unit
-      }
-      finally { fresh.unpersist(blocking = false): Unit }
+      // survivors that inherit expiring dirs — see SnapshotStore). The
+      // admission plan runs once, inside the commit's write, which counts
+      // its rows and publishes nothing for an empty admission.
+      store.commitAppend(fresh): Unit
     }
 
   /** The store-backed ingests' shared query: fingerprint every document

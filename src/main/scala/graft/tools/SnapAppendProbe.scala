@@ -28,7 +28,7 @@ object SnapAppendProbe {
       val per = (1 to triggers).map { i =>
         val b = rows(seed + i * batch, batch)
         val t1 = System.nanoTime()
-        if (mode == "append") st.commitAppend(b)
+        if (mode == "append") st.commitAppend(b).get
         else st.commit(st.readLatest().unionByName(b))
         (System.nanoTime() - t1) / 1e9
       }

@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -68,6 +69,22 @@ object PlanShapes {
       }
     } finally spark.listenerManager.unregister(listener)
     buf.synchronized(buf.toSeq)
+  }
+
+  /** Number of Spark jobs `body` started, counted by a `SparkListener`.
+    * The bus is drained before the listener joins (so earlier actions'
+    * queued events are not counted) and after `body` (so none of its own
+    * are missed). */
+  def jobsRun(spark: SparkSession)(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    require(drainListenerBus(spark), "cannot drain the listener bus")
+    spark.sparkContext.addSparkListener(listener)
+    try { body; require(drainListenerBus(spark), "cannot drain the listener bus") }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
   }
 
   /** Block until the shared listener bus has delivered every queued event

@@ -62,7 +62,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     st.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
     val v2 = st.commitAppend(Seq((3L, "c")).toDF("k", "v"))
     val v3 = st.commitAppend(Seq((4L, "d")).toDF("k", "v"))
-    assert((v2, v3) == (2L, 3L))
+    assert((v2, v3) == (Some(2L), Some(3L)))
     // time-travel contract unchanged: every version reads as committed
     assert(rows(st.read(1)) == Set((1L, "a"), (2L, "b")))
     assert(rows(st.read(2)) == Set((1L, "a"), (2L, "b"), (3L, "c")))
@@ -78,8 +78,26 @@ class SnapshotStoreSpec extends AnyFunSuite {
 
   test("commitAppend on an empty store is the first full commit") {
     val st = freshStore()
-    assert(st.commitAppend(Seq((1L, "a")).toDF("k", "v")) == 1L)
+    assert(st.commitAppend(Seq((1L, "a")).toDF("k", "v")).contains(1L))
     assert(rows(st.read(1)) == Set((1L, "a")))
+  }
+
+  test("commitAppend of an empty increment returns None: no new version, no temp dir left") {
+    val dir = Files.createTempDirectory("graft_snap_spec").toString
+    val st = new SnapshotStore(spark, s"$dir/store")
+    // an empty store stays empty: no schema-only v1
+    assert(st.commitAppend(Seq.empty[(Long, String)].toDF("k", "v")).isEmpty)
+    assert(st.versions.isEmpty)
+    st.commit(Seq((1L, "a")).toDF("k", "v"))
+    assert(st.commitAppend(spark.range(10).selectExpr("id as k", "cast(id as string) as v")
+      .filter("k < 0")).isEmpty)
+    assert(st.commitAppend(Seq((2L, "b")).toDF("k", "v").filter("k < 0")).isEmpty)
+    assert(st.versions == Seq(1L))
+    assert(new java.io.File(s"$dir/store").list().toSet == Set("v1"),
+      "an empty commitAppend must leave no __graft_snap_tmp")
+    // the next non-empty append still numbers from the head
+    assert(st.commitAppend(Seq((3L, "c")).toDF("k", "v")).contains(2L))
+    assert(rows(st.read(2)) == Set((1L, "a"), (3L, "c")))
   }
 
   test("commitAppend refuses a schema drift loudly (multi-dir chains need one schema)") {
@@ -105,7 +123,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(st.versions == Seq(3L, 4L))
     intercept[IllegalArgumentException](st.read(1))
     // a later append on a materialized head still chains correctly
-    val v5 = st.commitAppend(Seq((5L, "e")).toDF("k", "v"))
+    val v5 = st.commitAppend(Seq((5L, "e")).toDF("k", "v")).get
     assert(rows(st.read(v5)) == before4 + ((5L, "e")))
   }
 

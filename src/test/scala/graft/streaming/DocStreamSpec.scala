@@ -148,6 +148,43 @@ class DocStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  /** A started ingestToSnapshots on a fresh store: `body` gets the store,
+    * a `send` that adds one micro-batch and waits for it, and the root. */
+  private def withSnapshotIngest(body: (graft.sink.SnapshotStore, Seq[(Long, Timestamp, String)] => Unit, String) => Unit): Unit = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val root = java.nio.file.Files.createTempDirectory("graft_ingest_snap").toString
+    val store = new graft.sink.SnapshotStore(spark, s"$root/store")
+    val mem = MemoryStream[(Long, Timestamp, String)]
+    val q = DocStream.ingestToSnapshots(mem.toDF().toDF("doc_id", "ts", "text"), store, s"$root/ckpt")
+    try body(store, rows => { mem.addData(rows); q.processAllAvailable() }, root)
+    finally q.stop()
+  }
+
+  test("ingestToSnapshots: an all-duplicates micro-batch commits no version") {
+    withSnapshotIngest { (store, send, root) =>
+      send(Seq((1L, ts(0), "alpha beta"), (2L, ts(1), "gamma delta")))
+      assert(store.versions == Seq(1L))
+      // stored texts under new ids, plus two copies of one inside the batch
+      send(Seq((3L, ts(2), " alpha  beta "), (4L, ts(3), "gamma delta"), (5L, ts(3), "gamma delta")))
+      assert(store.versions == Seq(1L), "an empty admission burned a version")
+      assert(new java.io.File(s"$root/store").list().toSet == Set("v1"))
+      assert(store.readLatest().select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+    }
+  }
+
+  test("ingestToSnapshots: one admitting trigger over an existing head runs at most 3 jobs") {
+    withSnapshotIngest { (store, send, _) =>
+      send(Seq((1L, ts(0), "alpha beta"), (2L, ts(1), "gamma delta")))
+      val jobs = graft.core.PlanShapes.jobsRun(spark) {
+        send(Seq((3L, ts(2), " alpha  beta "), (4L, ts(3), "epsilon zeta")))
+      }
+      assert(store.versions == Seq(1L, 2L), "the trigger must admit a row")
+      // the in-batch dedup's shuffle, the head's key broadcast, the write
+      assert(jobs <= 3, s"$jobs jobs for one admitting trigger")
+    }
+  }
+
   /** A started store-backed ingest: `send` adds one micro-batch and waits
     * for it, `ids` reads the stored doc_ids back. */
   private final case class Ingest(send: Seq[(Long, Timestamp, String)] => Unit,
