@@ -39,10 +39,7 @@ object Bench {
     // Optional args = query-name filter, so a regression can be re-measured
     // in an isolated JVM (`runMain graft.Bench d_simhash`) without the other
     // 50+ queries' catalog/GC pressure. No args (the driver's call) = all.
-    val unknown = args.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty,
-      s"unknown quer${if (unknown.length == 1) "y" else "ies"}: ${unknown.mkString(", ")} " +
-        s"(a typo here would silently measure nothing)")
+    SparkEntry.requireKnown(args, "measure")
     val selected =
       if (args.nonEmpty) SparkEntry.queries.filter { case (n, _) => args.contains(n) }
       else SparkEntry.queries
@@ -78,9 +75,9 @@ object Bench {
     // isolated 3.49s vs 7.67s; r8: c_keepbest official 9.33s vs 5.6s
     // isolated, 1.67×). min bounds the one-sided noise (churn only ever
     // ADDS time), making the official per-query record trustworthy without
-    // a separate BenchIso cross-check. Cost: the session runs ~2× longer —
-    // the price of per-query numbers that can be read as regressions
-    // without a manual isolation pass.
+    // a separate `graft.tools.Probe reps` cross-check. Cost: the session
+    // runs ~2× longer — the price of per-query numbers that can be read as
+    // regressions without a manual isolation pass.
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       def rep(): Double = {
         val t0 = System.nanoTime()

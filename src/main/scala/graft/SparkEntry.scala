@@ -16,6 +16,17 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     PipelineA.queries ++ PipelineB.queries ++ LlmData.queries ++ Corpus.queries ++ InfraOps.queries
 
+  /** Refuse names missing from [[queries]] before any work starts — a
+    * typo would otherwise silently `verb` nothing, or fail partway
+    * through a list. */
+  def requireKnown(names: Iterable[String], verb: String): Unit = {
+    val known = queries.keySet
+    val unknown = names.filterNot(known)
+    require(unknown.isEmpty,
+      s"unknown quer${if (unknown.size == 1) "y" else "ies"}: ${unknown.mkString(", ")} " +
+        s"(a typo here would silently $verb nothing)")
+  }
+
   def oracleSql: Map[String, String] =
     PipelineA.oracleSql ++ PipelineB.oracleSql ++ LlmData.oracleSql ++ Corpus.oracleSql ++ InfraOps.oracleSql
 }

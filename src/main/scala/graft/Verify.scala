@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,23 +8,12 @@ object Verify {
     // Optional trailing args = query-name filter for fast local iteration
     // (`runMain graft.Verify <sf> <out> e_kmeans`); the driver passes none.
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // Semantic pins (non-ANSI, nanosAsLong, UTC) must hold for EVERY query,
-    // not only those whose first table access routes through Tables — query
-    // map iteration order must never decide whether a pin is in effect.
-    graft.core.GraftSession.applyDefaults(spark)
+    SparkEntry.requireKnown(only, "verify")
+    // GraftSession.local applies the semantic pins at session build, so they
+    // hold for EVERY query, whichever one first touches a table accessor.
+    val spark = graft.core.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val unknown = only.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty,
-      s"unknown quer${if (unknown.size == 1) "y" else "ies"}: ${unknown.mkString(", ")} " +
-        s"(a typo here would silently verify nothing)")
     val selected =
       if (only.nonEmpty) SparkEntry.queries.filter { case (n, _) => only(n) }
       else SparkEntry.queries

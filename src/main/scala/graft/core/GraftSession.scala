@@ -96,6 +96,19 @@ object GraftSession {
     }
   }
 
+  /** The one local-mode session builder (Verify, Plans, the dev tools and
+    * the test suite): `local[cpus]`, shuffle partitions = cpus, UI off,
+    * then `confs`, then [[applyDefaults]]. Bench and `job.Main` keep their
+    * own builders — Bench's is part of the driver contract, Main's runs on
+    * a cluster. */
+  def local(cpus: Int, confs: (String, String)*): SparkSession = {
+    val b = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+    confs.foreach { case (k, v) => b.config(k, v) }
+    applyDefaults(b.getOrCreate())
+  }
+
   def applyDefaults(spark: SparkSession): SparkSession = {
     Pins.foreach { case (k, v) =>
       try spark.conf.set(k, v)

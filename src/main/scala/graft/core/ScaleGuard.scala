@@ -4,7 +4,7 @@ package graft.core
   * quadratic all-pairs near-dup checks) when their input exceeds the
   * documented ceiling. A DISTINCT type, not a bare require: scale
   * rehearsals run the full registry at sf1/sf10+, where these rows are
-  * EXPECTED to refuse — harnesses ([[graft.Bench]], BenchIso) catch this
+  * EXPECTED to refuse — harnesses ([[graft.Bench]], `tools.Probe`) catch this
   * type and record `skipped_guard` instead of an error, so an artifact
   * with a tripped guard is distinguishable from one with a real failure.
   * Subclasses IllegalArgumentException so existing callers that treat the

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * The idiomatic production wiring: either
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions` or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`. Injected
+  * `.withExtensions(new GraftExtensions)` on the session builder. Injected
   * functions live in the session's *built-in-like* registry slot, so every
   * derived session (cloned states, `newSession()`) sees them without the
   * per-query defensive `VectorExprs.register` call (which remains available

@@ -790,7 +790,9 @@ object CorpusOps {
     * plan doubles per round and Catalyst re-analysis becomes the bottleneck
     * long before the data does. The convergence probe is one count per
     * round on the (small) label set. Worst-case rounds = graph diameter;
-    * near-dup components are shallow, so this terminates in a handful. */
+    * near-dup components are shallow, so this terminates in a handful.
+    * Throws `IllegalStateException` if labels still change at
+    * `maxIterations`. */
   def clusterLabelsConverged(pairs: DataFrame, maxIterations: Int = 20): DataFrame = {
     // Same dst-co-partitioned edge cache as [[clusterLabels]].
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
@@ -809,6 +811,14 @@ object CorpusOps {
       labels = next
       i += 1
     }
+    // Loud cap exit, as in StarComponents: labels still moving are not
+    // component minima, and the specs comparing against this reference
+    // would compare against a truncated answer.
+    if (changed)
+      throw new IllegalStateException(
+        s"clusterLabelsConverged did not converge within $maxIterations min-label " +
+          "rounds (labels still changing); labels at a capped exit would be silently " +
+          "non-canonical. Raise maxIterations (rounds grow with the graph diameter).")
     labels.select("doc_id", "cluster")
   }
 

@@ -835,8 +835,8 @@ object InfraOps {
       // changes no decision — the skew structure rides l_orderkey % 10,
       // independent of the halving, and the thresholds below clear both
       // halved table sizes at sf0.01 and sf0.1. Production pays these
-      // passes once per ingest (stats are standing artifacts; EstServe
-      // measures the serving form at ~2 s flat across SF).
+      // passes once per ingest (stats are standing artifacts; SCALING.md
+      // measured the serving form at ~2 s flat across SF).
       val li = cs.persisted(s.read.parquet(s"$d/lineitem.parquet")
         .filter(col("l_orderkey") % 2 === 0).selectExpr(
         "CAST(l_orderkey AS BIGINT) AS k_uni",

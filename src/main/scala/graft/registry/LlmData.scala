@@ -314,7 +314,7 @@ object LlmData {
     //
     // CONTRACTED form, not the plain peel the doc axis uses: unlike the
     // doc near-dup graph (peel depth bound by duplicate-family
-    // structure — measured 9 flat across TriBench decades), the knn
+    // structure — measured 9 flat across SynthScale decades), the knn
     // graph's depth follows its longest semantic DRIFT CHAIN through
     // the APPROXIMATE pipeline's realized edges — measured 7 → 23 → 10
     // across the sf0.1/sf1/sf10 decades, non-monotone and predicted by

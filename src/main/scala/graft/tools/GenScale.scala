@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Generator for SCALE REHEARSALS
@@ -61,10 +61,7 @@ object GenScale {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    graft.core.GraftSession.applyDefaults(spark)
+    val spark = graft.core.GraftSession.local(32)
     spark.sparkContext.setLogLevel("WARN")
     val src = "/root/testdata/sf0.1"
     val out = args.headOption.getOrElse("/root/repo/tmp/sf1")

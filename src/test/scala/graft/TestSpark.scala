@@ -6,12 +6,5 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test run (sessions are expensive;
   * suites must not stop it). */
 object TestSpark {
-  lazy val spark: SparkSession = GraftSession.applyDefaults(
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+  lazy val spark: SparkSession = GraftSession.local(4)
 }

@@ -78,7 +78,7 @@ class GraphMetricsSpec extends AnyFunSuite {
   }
 
   test("approx at p = 1/16: whole-graph estimate holds while per-node estimates go sparse") {
-    // The variance story behind the dense-regime knob (TriBench `sweep`
+    // The variance story behind the dense-regime knob (SynthScale `sweep`
     // measures it at 64k nodes: whole-graph error −0.45% → −1.05% from
     // p = 1/2 to 1/16 while per-node zero-rate climbs 0% → 89.6%): the
     // AGGREGATE stays usable at deep sparsification because survivors

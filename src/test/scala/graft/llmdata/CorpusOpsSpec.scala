@@ -229,6 +229,21 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(r1(4L) == 3L)
   }
 
+  test("clusterLabelsConverged throws at its cap instead of returning moving labels") {
+    // 30-node chain 28-26-…-2-0-1-3-…-29: node 0 sits 15 hops from the far
+    // end, so labels settle after 15 rounds and the 16th confirms — inside
+    // the default cap of 20, far outside a cap of 2.
+    val order = (28L to 2L by -2L) ++ Seq(0L) ++ (1L to 29L by 2L)
+    val pairs = order.zip(order.tail).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException] {
+      CorpusOps.clusterLabelsConverged(pairs, maxIterations = 2)
+    }
+    assert(e.getMessage.contains("did not converge within 2"))
+    val labels = CorpusOps.clusterLabelsConverged(pairs).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels == (0L until 30L).map(_ -> 0L).toMap)
+  }
+
   test("fixture dedup clusters: 3 fixed rounds reach the converged fixpoint") {
     val pairs = DocDedup.minhashLshPairs(docs)
     pairs.persist()

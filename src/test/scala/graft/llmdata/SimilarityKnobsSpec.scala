@@ -64,7 +64,7 @@ class SimilarityKnobsSpec extends AnyFunSuite {
   test("cosineNearDupPairs guard trips past maxRows and admits inputs at the limit") {
     // The guard must fail at PLAN BUILD (before any N² job is scheduled),
     // so the assertion is on the builder call itself.
-    // The refined refusal type is part of the contract: Bench/BenchIso
+    // The refined refusal type is part of the contract: Bench/Probe
     // catch exactly this to record `skipped_guard` in scale sessions.
     val e = intercept[graft.core.ScaleGuardRefusal] {
       Similarity.cosineNearDupPairs(vecs(12, 8), threshold = 0.5, maxRows = 10)
