@@ -388,16 +388,18 @@ object GraphMetrics {
   private def kCoreWithDepth(pairs: DataFrame, k: Int,
                              maxRounds: Int): (DataFrame, Int) = {
     require(k >= 1, s"k must be >= 1, got $k")
-    var edges = pairs
+    val canonical = pairs
       .select(least(col("id_a"), col("id_b")).as("u"),
         greatest(col("id_a"), col("id_b")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
       .transform(graft.core.Lineage.truncate)
-    var n = edges.count()
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
+    // An edge set that peels empty exactly at the cap is the (empty) core.
+    val ((edges, _), rounds) = Fixpoint.converge[(DataFrame, Long)](s"kCore(k=$k)", maxRounds,
+      { case (_, n) => s"($n edges still peeling); a truncated peel is not the peeling " +
+        s"fixpoint and silently includes sub-$k-degree members. Raise maxRounds " +
+        "(rounds = the graph's peel depth)." },
+      exemptAtCap = _._2 == 0L)((canonical, canonical.count())) { case (edges, n) =>
       val deg = edges.select(col("u").as("node")).union(edges.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
       val keep = deg.filter(col("deg") >= k).select("node")
@@ -409,16 +411,8 @@ object GraphMetrics {
       // Peeling only deletes edges: equal count ⇔ no node fell below k
       // this round ⇔ fixpoint (degrees can only have dropped).
       val nNext = next.count()
-      converged = nNext == n
-      edges = next
-      n = nNext
-      rounds += 1
+      ((next, nNext), nNext == n)
     }
-    if (!converged && n > 0)
-      throw new IllegalStateException(
-        s"kCore(k=$k) did not reach its peeling fixpoint within $maxRounds rounds " +
-          s"($n edges still peeling); a truncated peel silently includes sub-$k-degree " +
-          "members. Raise maxRounds (rounds = the graph's peel depth).")
     (edges.select(col("u").as("doc_id")).union(edges.select(col("v").as("doc_id")))
       .groupBy("doc_id").agg(count(lit(1)).as("deg")), rounds)
   }
@@ -484,10 +478,7 @@ object GraphMetrics {
       .transform(graft.core.Lineage.truncate)
     // Working multigraph: (u, v, cnt) with u <= v; u == v is a self-loop
     // counting 2·cnt toward u's degree.
-    var edges = und.withColumn("cnt", lit(1L)).transform(graft.core.Lineage.truncate)
-    var n = edges.count()
-    var rounds = 0
-    var converged = false
+    val multi = und.withColumn("cnt", lit(1L)).transform(graft.core.Lineage.truncate)
     val records = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def degrees(e: DataFrame): DataFrame = e
       .select(col("u").as("node"),
@@ -495,21 +486,22 @@ object GraphMetrics {
       .union(e.filter(col("u") =!= col("v"))
         .select(col("v").as("node"), col("cnt").as("w")))
       .groupBy("node").agg(sum(col("w")).as("deg"))
-    while (!converged && rounds < maxRounds) {
+    val ((edges, _), rounds) = Fixpoint.converge[(DataFrame, Long)]("kCore2Contracted", maxRounds,
+      { case (_, n) => s"($n multi-edges still active); a truncated peel is not the 2-core " +
+        "fixpoint and silently includes sub-2-degree members. Raise maxRounds " +
+        "(rounds are O(log chain length))." },
+      exemptAtCap = _._2 == 0L)((multi, multi.count())) { case (edges, n) =>
       // Peel wave: drop every node of degree < 2 (bulk, as in kCore).
       val keep = degrees(edges).filter(col("deg") >= 2).select("node")
       val peeled = edges
         .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
         .transform(graft.core.Lineage.truncate)
-      val nPeeled = peeled.count()
-      rounds += 1
-      if (nPeeled == n) {
+      if (peeled.count() == n) {
         // No node fell below 2: every remaining live node is in-core.
         // Contraction exists only to ACCELERATE active peels (a pure
         // cycle converges here in round 1 without ever contracting).
-        converged = true
-        edges = peeled
+        ((peeled, n), true)
       } else {
         // Smooth an independent set of degree-2 chain nodes. Eligible:
         // degree exactly 2, no self-loop (terminal cycles stay), and a
@@ -550,15 +542,9 @@ object GraphMetrics {
             greatest(col("x"), col("y")).as("v"), lit(1L).as("cnt")))
           .groupBy("u", "v").agg(sum(col("cnt")).as("cnt"))
           .transform(graft.core.Lineage.truncate)
-        n = next.count()
-        edges = next
+        ((next, next.count()), false)
       }
     }
-    if (!converged && n > 0)
-      throw new IllegalStateException(
-        s"kCore2Contracted did not reach its fixpoint within $maxRounds rounds " +
-          s"($n multi-edges still active); a truncated peel silently includes " +
-          "sub-2-degree members. Raise maxRounds (rounds are O(log chain length)).")
     // Resolve covered nodes newest-first: a node smoothed in round r
     // references endpoints that are either final survivors or covered in
     // a LATER round — already resolved by the time round r replays.

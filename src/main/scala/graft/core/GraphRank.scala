@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * cross-engine EXACT check no floating-point PageRank can offer.
   *
   * Scale shape: one persisted symmetric edge frame; each round is ONE
-  * equi-join (edges ⋈ rank on src — rank carries deg, so no second join)
-  * plus ONE groupBy(dst) with map-side partial sums — two edge-set
+  * equi-join (edges ⋈ rank on src — rank carries the weighted degree W,
+  * which is deg at unit weights, so no second join) plus ONE groupBy(dst) with map-side partial sums — two edge-set
   * shuffles per round, never a corpus shuffle, the
   * [[graft.llmdata.CorpusOps.clusterLabels]] budget. Fixed iterations
   * (power iteration truncated, not converged) keep the operator a pure
@@ -49,41 +49,13 @@ object GraphRank {
     *              loops ([[graft.llmdata.DocDedup.minhashLshPairs]]'s
     *              contract). Parallel edges, if present, are multigraph
     *              edges — each carries mass.
+    *
+    * Runs [[pageRankWeightedPpm]]'s loop at unit weights: with w ≡ 1,
+    * q·1 + (rem·1) div deg = rank div deg, so the ranks are the formula
+    * above bit for bit (spec-pinned).
     */
-  def pageRankPpm(pairs: DataFrame, iterations: Int = 5): DataFrame = {
-    require(iterations >= 0, s"iterations must be >= 0, got $iterations")
-    // The edge frame is repartitioned ONCE by src and persisted WITH
-    // that partitioning (cached plans keep their outputPartitioning —
-    // the scoreSeedPairsInBuckets discipline): every round's edges⋈rank
-    // join then plans NO exchange on the edge side, and the degree
-    // aggregation below is exchange-free too. Per round the only
-    // m-sized shuffle left is the contribution transpose
-    // (groupBy(dst)), which IS the algorithm; the rank side is N rows.
-    val edges = CacheScope.persisted(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-        .repartition(col("src")))
-    // rank carries deg so each round joins ONCE; both start checkpointed
-    // so round plans reference a leaf, never the degree aggregation.
-    var rank = edges.groupBy(col("src").as("doc_id"))
-      .agg(count(lit(1)).as("deg"))
-      .withColumn("rank_ppm", lit(1000000L))
-      .transform(graft.core.Lineage.truncate)
-    for (_ <- 1 to iterations) {
-      val contrib = edges
-        .join(rank.select(col("doc_id").as("src"),
-          expr("((rank_ppm div deg) * 17) div 20").as("__c")), "src")
-        .groupBy(col("dst").as("doc_id"))
-        .agg(sum("__c").as("__s"))
-      rank = rank.select("doc_id", "deg")
-        .join(contrib, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("deg"),
-          (lit(150000L) + coalesce(col("__s"), lit(0L))).as("rank_ppm"))
-        .transform(graft.core.Lineage.truncate)
-    }
-    edges.unpersist(blocking = false)
-    rank.select("doc_id", "rank_ppm")
-  }
+  def pageRankPpm(pairs: DataFrame, iterations: Int = 5): DataFrame =
+    pageRankWeightedPpm(pairs.select(col("id_a"), col("id_b"), lit(1L).as("w_ppm")), iterations)
 
   /** Edge-WEIGHTED PageRank in the same integer-ppm discipline — mass
     * flows in proportion to edge weight instead of splitting evenly:
@@ -106,13 +78,12 @@ object GraphRank {
     * graph, where W ≤ k·10⁶). All operands stay non-negative, so Spark
     * `div`/`%` and DuckDB `//`/`%` agree and the oracle is bit-exact.
     *
-    * Uniform weights reproduce [[pageRankPpm]] EXACTLY (not just
+    * Uniform weights reproduce the unweighted ranks EXACTLY (not just
     * approximately): for w_uv ≡ c, q·c + (rem·c) div (deg·c) =
-    * (rank div deg) ... truncated identically — pinned by the spec.
-    * Same plan shape as the unweighted loop: the edge frame (now
-    * carrying w) is repartitioned once by src and persisted with that
-    * partitioning; rank carries W so each round is ONE equi-join + ONE
-    * groupBy(dst).
+    * (rank div deg) ... truncated identically — pinned by the spec, and
+    * the reason [[pageRankPpm]] is this loop at w ≡ 1. The edge frame is
+    * repartitioned once by src and persisted with that partitioning;
+    * rank carries W so each round is ONE equi-join + ONE groupBy(dst).
     *
     * @param pairs (id_a, id_b, w_ppm) undirected weighted edges,
     *              near-dup convention; w_ppm must be ≥ 1 (a zero weight

@@ -5,11 +5,14 @@ import org.apache.spark.sql.DataFrame
 /** Lineage-truncation policy — the ONE place that decides how iterative
   * operators cut their per-round plans (r16, VERDICT item 7).
   *
-  * Every fixed-point/round loop here (star contraction, pagerank, k-core
-  * peel, BPE rounds, NN-Descent, label propagation) must materialize each
-  * round and truncate lineage — without it the logical plan doubles per
-  * round and Catalyst re-analysis dwarfs the data long before scale does
-  * (measured repeatedly; see clusterLabelsConverged). `localCheckpoint`
+  * Every fixed-point/round loop here must materialize each round and
+  * truncate lineage: the converge-or-throw loops driven by
+  * [[Fixpoint.converge]] (star contraction, both k-core peels,
+  * converged label propagation) call it in their round steps, and the
+  * fixed-round ones (pagerank, BPE rounds, NN-Descent) in their bodies.
+  * Without it the logical plan doubles per round and Catalyst
+  * re-analysis dwarfs the data long before scale does (measured
+  * repeatedly; see clusterLabelsConverged). `localCheckpoint`
   * is the right local-mode tool: executor-local blocks, no filesystem
   * round-trip. Its documented weakness is cluster fault-tolerance — the
   * blocks are NOT recomputable, so on a real cluster an executor loss

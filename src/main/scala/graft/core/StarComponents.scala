@@ -76,73 +76,66 @@ object StarComponents {
   def componentsWithRounds(pairs: DataFrame,
                            maxIterations: Int = 50,
                            lightMaxEdges: Long = StarLightMaxEdges): (DataFrame, Int) = {
-    val sym = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
-      .union(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
-      .filter(col("u") =!= col("v"))
     // Invariant carried through every round: edges oriented high → low
     // (u > v), no self loops, distinct. Both star steps preserve it.
-    var edges = sym
+    val canonical = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
+      .union(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
+      .filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
       .distinct()
       .transform(graft.core.Lineage.truncate)
-    var rounds = 0
-    var nEdges = edges.count()
-    var converged = nEdges == 0L
-    while (!converged && rounds < maxIterations) {
-      // Each star consumes its input TWICE (a groupBy-min and a join on
-      // the same node key). Above the size gate, both the neighbor frame
-      // and the large-star output are cached CO-PARTITIONED on that key:
-      // without the caches the second reference re-evaluates the whole
-      // prior star (AQE exchange reuse measured NOT to fire across the
-      // groupBy/join pair — chain probe: −22–27% from the caches at 2 M
-      // nodes), and with unpartitioned caches both references still
-      // shuffle. Below the gate the two persists + repartitions per
-      // round are pure scheduling floor (measured +1–3.5 s per fixture
-      // row, the knn small-N lesson), so the round runs the plain inline
-      // plans — a tiny star re-evaluated twice is still tiny. The gate
-      // reuses the convergence probe's count; no extra jobs. Same plans
-      // either way — labels are spec-pinned identical.
-      val light = nEdges <= lightMaxEdges
-      val toFree = scala.collection.mutable.Buffer.empty[DataFrame]
-      def staged(df: DataFrame): DataFrame =
-        if (light) df
-        else { val c = CacheScope.persisted(df.repartition(col("u"))); toFree += c; c }
-      val nbr = staged(edges.union(edges.select(col("v").as("u"), col("u").as("v"))))
-      val lsMins = nbr.groupBy("u").agg(min("v").as("__mn"))
-        .select(col("u"), least(col("u"), col("__mn")).as("m"))
-      val ls = staged(
-        nbr.join(lsMins, "u")
-          .filter(col("v") > col("u"))
-          .select(col("v").as("u"), col("m").as("v"))
-          .distinct())
-      val ssMins = ls.groupBy("u").agg(min("v").as("m"))
-      val next = ls.join(ssMins, "u")
-        .filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(ssMins.select(col("u"), col("m").as("v")))
-        .distinct()
-        .transform(graft.core.Lineage.truncate)
-      toFree.foreach(_.unpersist(blocking = false))
-      // Both frames are distinct rows; equal count + empty difference ⇔
-      // equal sets. Runs over the (shrinking) edge set, never the corpus.
-      val nNext = next.count()
-      converged = nNext == nEdges &&
-        next.except(edges).limit(1).count() == 0L
-      edges = next
-      nEdges = nNext
-      rounds += 1
-    }
+    val n0 = canonical.count()
     // Loud cap exit (never wrong answers): the extraction below assumes
     // the disjoint-star fixpoint. On a capped non-converged edge set it
     // would emit non-canonical clusters — and TWO label rows for a node
     // still holding two edges — with no signal. See the cap policy on
     // [[components]]; StarComponentsSpec pins this with maxIterations = 1.
-    if (!converged)
-      throw new IllegalStateException(
-        s"StarComponents did not converge within $maxIterations large/small-star " +
-          s"alternations ($nEdges edges still moving); labels at a capped exit " +
-          "would be silently non-canonical. Raise maxIterations (rounds grow " +
-          "~O(log^2 n); measured 25 at 20M adversarial chain nodes).")
+    val ((edges, _), rounds) =
+      if (n0 == 0L) ((canonical, 0L), 0)
+      else Fixpoint.converge[(DataFrame, Long)]("StarComponents", maxIterations,
+        { case (_, n) => s"($n edges still moving); labels at a capped exit would be " +
+          "silently non-canonical. Raise maxIterations (rounds grow ~O(log^2 n); " +
+          "measured 25 at 20M adversarial chain nodes)." })((canonical, n0)) {
+        case (edges, nEdges) =>
+          // Each star consumes its input TWICE (a groupBy-min and a join on
+          // the same node key). Above the size gate, both the neighbor frame
+          // and the large-star output are cached CO-PARTITIONED on that key:
+          // without the caches the second reference re-evaluates the whole
+          // prior star (AQE exchange reuse measured NOT to fire across the
+          // groupBy/join pair — chain probe: −22–27% from the caches at 2 M
+          // nodes), and with unpartitioned caches both references still
+          // shuffle. Below the gate the two persists + repartitions per
+          // round are pure scheduling floor (measured +1–3.5 s per fixture
+          // row, the knn small-N lesson), so the round runs the plain inline
+          // plans — a tiny star re-evaluated twice is still tiny. The gate
+          // reuses the convergence probe's count; no extra jobs. Same plans
+          // either way — labels are spec-pinned identical.
+          val light = nEdges <= lightMaxEdges
+          val toFree = scala.collection.mutable.Buffer.empty[DataFrame]
+          def staged(df: DataFrame): DataFrame =
+            if (light) df
+            else { val c = CacheScope.persisted(df.repartition(col("u"))); toFree += c; c }
+          val nbr = staged(edges.union(edges.select(col("v").as("u"), col("u").as("v"))))
+          val lsMins = nbr.groupBy("u").agg(min("v").as("__mn"))
+            .select(col("u"), least(col("u"), col("__mn")).as("m"))
+          val ls = staged(
+            nbr.join(lsMins, "u")
+              .filter(col("v") > col("u"))
+              .select(col("v").as("u"), col("m").as("v"))
+              .distinct())
+          val ssMins = ls.groupBy("u").agg(min("v").as("m"))
+          val next = ls.join(ssMins, "u")
+            .filter(col("v") =!= col("m"))
+            .select(col("v").as("u"), col("m").as("v"))
+            .union(ssMins.select(col("u"), col("m").as("v")))
+            .distinct()
+            .transform(graft.core.Lineage.truncate)
+          toFree.foreach(_.unpersist(blocking = false))
+          // Both frames are distinct rows; equal count + empty difference ⇔
+          // equal sets. Runs over the (shrinking) edge set, never the corpus.
+          val nNext = next.count()
+          ((next, nNext), nNext == nEdges && next.except(edges).limit(1).count() == 0L)
+      }
     // Fixpoint = disjoint stars: every non-root holds exactly one edge to
     // its component minimum; roots appear only on the low side.
     val labels = edges.select(col("u").as("doc_id"), col("v").as("cluster"))
@@ -151,7 +144,7 @@ object StarComponents {
     (labels, rounds)
   }
 
-  // Star-step semantics (inlined in the round loop above for the cache
+  // Star-step semantics (inlined in the round step above for the cache
   // lifecycle):
   //  - LARGE-STAR (nbr → ls): every node attaches its STRICTLY LARGER
   //    neighbors to the minimum of its closed neighborhood. Emitted

@@ -759,20 +759,23 @@ object CorpusOps {
     * near-dup pairs, so the loop runs on a graph orders of magnitude
     * smaller than the input. */
   def clusterLabels(pairs: DataFrame, iterations: Int = 3): DataFrame = {
-    // Repartitioned ONCE by the per-round join key and persisted WITH
-    // that partitioning (cached plans keep their outputPartitioning):
-    // every propagation round's edges⋈labels join plans no exchange on
-    // the edge side — only the (smaller) label frame and the per-round
-    // groupBy move.
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .repartition(col("dst"))
-      .transform(graft.core.CacheScope.persisted)
+    val edges = labelEdges(pairs)
     var labels = edges.select(col("src").as("doc_id")).distinct()
       .withColumn("cluster", col("doc_id"))
     for (_ <- 1 to iterations) labels = propagateOnce(edges, labels)
     labels.select("doc_id", "cluster")
   }
+
+  /** The symmetric (src, dst) edge frame of `pairs`, repartitioned ONCE
+    * by the per-round join key and persisted WITH that partitioning
+    * (cached plans keep their outputPartitioning): every propagation
+    * round's edges⋈labels join plans no exchange on the edge side — only
+    * the (smaller) label frame and the per-round groupBy move. */
+  private def labelEdges(pairs: DataFrame): DataFrame =
+    pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+      .repartition(col("dst"))
+      .transform(graft.core.CacheScope.persisted)
 
   /** One min-label round: label := min(label, min over neighbors' labels). */
   private def propagateOnce(edges: DataFrame, labels: DataFrame): DataFrame = {
@@ -792,34 +795,24 @@ object CorpusOps {
     * round on the (small) label set. Worst-case rounds = graph diameter;
     * near-dup components are shallow, so this terminates in a handful.
     * Throws `IllegalStateException` if labels still change at
-    * `maxIterations`. */
+    * `maxIterations` — labels still moving are not component minima, and
+    * the specs comparing against this reference would compare against a
+    * truncated answer. The returned labels are a checkpointed leaf, so
+    * the edge cache is released before returning. */
   def clusterLabelsConverged(pairs: DataFrame, maxIterations: Int = 20): DataFrame = {
-    // Same dst-co-partitioned edge cache as [[clusterLabels]].
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .repartition(col("dst"))
-      .transform(graft.core.CacheScope.persisted)
-    var labels = edges.select(col("src").as("doc_id")).distinct()
+    val edges = labelEdges(pairs)
+    val init = edges.select(col("src").as("doc_id")).distinct()
       .withColumn("cluster", col("doc_id"))
       .transform(graft.core.Lineage.truncate)
-    var changed = true
-    var i = 0
-    while (changed && i < maxIterations) {
-      val next = propagateOnce(edges, labels).transform(graft.core.Lineage.truncate)
-      changed = next.join(labels.withColumnsRenamed(Map("cluster" -> "prev")), "doc_id")
-        .filter(col("cluster") =!= col("prev")).limit(1).count() > 0
-      labels = next
-      i += 1
-    }
-    // Loud cap exit, as in StarComponents: labels still moving are not
-    // component minima, and the specs comparing against this reference
-    // would compare against a truncated answer.
-    if (changed)
-      throw new IllegalStateException(
-        s"clusterLabelsConverged did not converge within $maxIterations min-label " +
-          "rounds (labels still changing); labels at a capped exit would be silently " +
-          "non-canonical. Raise maxIterations (rounds grow with the graph diameter).")
-    labels.select("doc_id", "cluster")
+    try {
+      graft.core.Fixpoint.converge[DataFrame]("clusterLabelsConverged", maxIterations,
+        _ => "(labels still changing); labels at a capped exit would be silently " +
+          "non-canonical. Raise maxIterations (rounds grow with the graph diameter).")(init) { labels =>
+        val next = propagateOnce(edges, labels).transform(graft.core.Lineage.truncate)
+        (next, next.join(labels.withColumnsRenamed(Map("cluster" -> "prev")), "doc_id")
+          .filter(col("cluster") =!= col("prev")).limit(1).count() == 0L)
+      }._1.select("doc_id", "cluster")
+    } finally edges.unpersist(blocking = false)
   }
 
   /** Dedup clusters of the fixture corpus: MinHash-LSH near-dup pairs →

@@ -234,20 +234,24 @@ object Corpus {
        |    / (len(sa.s) + len(sb.s) - len(list_filter(sa.s, x -> list_contains(sb.s, x)))), 6) >= 0.5)""".stripMargin
 
   /** Unrolled min-label propagation (3 rounds — same fixed count as
-    * [[CorpusOps.dedupClusters]]). */
-  private val clustersCtes = {
+    * [[CorpusOps.dedupClusters]]) over the pair CTE `pairs(id_a, id_b)`:
+    * the symmetric edge CTE `edges`, then label CTEs `l0`..`l3` keyed on
+    * `id` — shared by the doc-axis and knn-axis cluster twins. */
+  private[registry] def labelRoundsCtes(pairs: String, edges: String, id: String): String = {
     val rounds = (1 to 3).map { i =>
-      s"""m$i AS (SELECT e.src AS doc_id, min(x.cluster) AS nbr
-         |        FROM edges e JOIN l${i - 1} x ON e.dst = x.doc_id GROUP BY e.src),
-         |l$i AS (SELECT l.doc_id, least(l.cluster, coalesce(m.nbr, l.cluster)) AS cluster
-         |        FROM l${i - 1} l LEFT JOIN m$i m USING (doc_id))""".stripMargin
+      s"""m$i AS (SELECT e.src AS $id, min(x.cluster) AS nbr
+         |        FROM $edges e JOIN l${i - 1} x ON e.dst = x.$id GROUP BY e.src),
+         |l$i AS (SELECT l.$id, least(l.cluster, coalesce(m.nbr, l.cluster)) AS cluster
+         |        FROM l${i - 1} l LEFT JOIN m$i m USING ($id))""".stripMargin
     }.mkString(",\n")
-    s"""${minhashPairCtes("documents", "")},
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |          UNION ALL SELECT id_b, id_a FROM pairs),
-       |l0 AS (SELECT DISTINCT src AS doc_id, src AS cluster FROM edges),
+    s"""$edges AS (SELECT id_a AS src, id_b AS dst FROM $pairs
+       |${" " * (edges.length + 5)}UNION ALL SELECT id_b, id_a FROM $pairs),
+       |l0 AS (SELECT DISTINCT src AS $id, src AS cluster FROM $edges),
        |$rounds""".stripMargin
   }
+
+  private val clustersCtes =
+    s"${minhashPairCtes("documents", "")},\n${labelRoundsCtes("pairs", "edges", "doc_id")}"
 
   private val clustersSql =
     s"WITH $clustersCtes\nSELECT doc_id, cluster FROM l3"
@@ -379,29 +383,33 @@ object Corpus {
        |FROM tnodes LEFT JOIN tn n USING (doc_id)""".stripMargin
   }
 
-  /** Integer-ppm PageRank over the near-dup pair graph, unrolled to the
-    * same fixed round count as [[graft.core.GraphRank.pageRankPpm]] —
-    * `//` in DuckDB and `div` in Spark truncate identically on the
+  /** Integer-ppm PageRank unrolled to the same fixed round count as
+    * [[graft.core.GraphRank.pageRankPpm]], over the pair CTE
+    * `pairs(id_a, id_b)` at the end of the `upstream` CTE chain: the
+    * symmetric edge CTE `edges`, then rank CTEs keyed on `id` — shared by
+    * the doc-axis (x_pagerank) and knn-axis (x_knn_pagerank) twins. `//`
+    * in DuckDB and `div` in Spark truncate identically on the
     * all-positive operands here, so the ranks are cross-engine exact. */
-  private def pagerankSql(iters: Int): String = {
+  private[registry] def pagerankSql(upstream: String, pairs: String, edges: String,
+                                    id: String, iters: Int): String = {
     // MATERIALIZED is load-bearing: DuckDB inlines plain CTEs per
     // reference, and each unrolled round references the previous one
     // TWICE — 2^iters copies of the whole upstream pair chain without it
     // (measured: the 5-round knn-axis twin ran >10 min plain, <1 s
     // materialized at sf0.01).
     val rounds = (1 to iters).map { i =>
-      s"""pc$i AS MATERIALIZED (SELECT e.dst AS doc_id, sum(((r.rank_ppm // r.deg) * 17) // 20) AS s
-         |         FROM predges e JOIN pr${i - 1} r ON e.src = r.doc_id GROUP BY e.dst),
-         |pr$i AS MATERIALIZED (SELECT r.doc_id, r.deg, CAST(150000 + coalesce(c.s, 0) AS BIGINT) AS rank_ppm
-         |         FROM pr${i - 1} r LEFT JOIN pc$i c USING (doc_id))""".stripMargin
+      s"""pc$i AS MATERIALIZED (SELECT e.dst AS $id, sum(((r.rank_ppm // r.deg) * 17) // 20) AS s
+         |         FROM $edges e JOIN pr${i - 1} r ON e.src = r.$id GROUP BY e.dst),
+         |pr$i AS MATERIALIZED (SELECT r.$id, r.deg, CAST(150000 + coalesce(c.s, 0) AS BIGINT) AS rank_ppm
+         |         FROM pr${i - 1} r LEFT JOIN pc$i c USING ($id))""".stripMargin
     }.mkString(",\n")
-    s"""WITH ${minhashPairCtes("documents", "")},
-       |predges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
-       |            UNION ALL SELECT id_b, id_a FROM pairs),
-       |pr0 AS MATERIALIZED (SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS deg,
-       |        CAST(1000000 AS BIGINT) AS rank_ppm FROM predges GROUP BY src),
+    s"""WITH $upstream,
+       |$edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM $pairs
+       |${" " * (edges.length + 5)}UNION ALL SELECT id_b, id_a FROM $pairs),
+       |pr0 AS MATERIALIZED (SELECT src AS $id, CAST(count(*) AS BIGINT) AS deg,
+       |        CAST(1000000 AS BIGINT) AS rank_ppm FROM $edges GROUP BY src),
        |$rounds
-       |SELECT doc_id, rank_ppm FROM pr$iters""".stripMargin
+       |SELECT $id, rank_ppm FROM pr$iters""".stripMargin
   }
 
   /** TRUE connected components of the near-dup pair graph — recursive
@@ -859,7 +867,7 @@ object Corpus {
     "c_cc" -> ccSql,
     "c_cc_incr" -> ccSql,
     "c_qnorm" -> qnormSql,
-    "x_pagerank" -> pagerankSql(5),
+    "x_pagerank" -> pagerankSql(minhashPairCtes("documents", ""), "pairs", "predges", "doc_id", 5),
     "x_triangles" -> trianglesSql,
     "x_triangles_approx" -> trianglesApproxSql,
     "x_clustcoef" -> clustcoefSql,

@@ -1349,29 +1349,6 @@ object LlmData {
        |           FROM mu JOIN n2 a ON mu.id_a = a.vec_id JOIN n2 b ON mu.id_b = b.vec_id)
        |        WHERE cos >= 0.4)""".stripMargin
 
-  /** x_knn_pagerank twin: [[mutualKnnCtes]] feeding the same unrolled
-    * integer-ppm rounds as the document-axis x_pagerank oracle (damping
-    * as exact 17/20, `//` ≡ Spark `div` on the all-positive operands). */
-  private def knnPagerankSql(k: Int, iters: Int): String = {
-    // MATERIALIZED is load-bearing: DuckDB inlines plain CTEs per
-    // reference and each round references the previous one twice —
-    // 2^iters copies of the whole knn chain without it (measured >10 min
-    // plain vs <1 s materialized at sf0.01).
-    val rounds = (1 to iters).map { i =>
-      s"""pc$i AS MATERIALIZED (SELECT e.dst AS vec_id, sum(((r.rank_ppm // r.deg) * 17) // 20) AS s
-         |         FROM kedges e JOIN pr${i - 1} r ON e.src = r.vec_id GROUP BY e.dst),
-         |pr$i AS MATERIALIZED (SELECT r.vec_id, r.deg, CAST(150000 + coalesce(c.s, 0) AS BIGINT) AS rank_ppm
-         |         FROM pr${i - 1} r LEFT JOIN pc$i c USING (vec_id))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH ${mutualKnnCtes(k)},
-       |kedges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM muv
-       |           UNION ALL SELECT id_b, id_a FROM muv),
-       |pr0 AS MATERIALIZED (SELECT src AS vec_id, CAST(count(*) AS BIGINT) AS deg,
-       |        CAST(1000000 AS BIGINT) AS rank_ppm FROM kedges GROUP BY src),
-       |$rounds
-       |SELECT vec_id, rank_ppm FROM pr$iters""".stripMargin
-  }
-
   /** x_knn_pagerank_w twin: the same chain with edge mass proportional to
     * the stored cosine — w = floor(cos · 10⁶) ppm, per-edge contribution
     * via the exact quotient-remainder split
@@ -1433,21 +1410,6 @@ object LlmData {
        |        FROM muv WHERE id_a != id_b),
        |${Corpus.kcorePeelCtes(coreK, Corpus.KCoreTwinRounds)}
        |${Corpus.kcorePeelSelect("vec_id", Corpus.KCoreTwinRounds)}""".stripMargin
-
-  private def knnClustersSql(k: Int): String = {
-    val rounds = (1 to 3).map { i =>
-      s"""m$i AS (SELECT e.src AS vec_id, min(x.cluster) AS nbr
-         |        FROM kedges e JOIN l${i - 1} x ON e.dst = x.vec_id GROUP BY e.src),
-         |l$i AS (SELECT l.vec_id, least(l.cluster, coalesce(m.nbr, l.cluster)) AS cluster
-         |        FROM l${i - 1} l LEFT JOIN m$i m USING (vec_id))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH ${mutualKnnCtes(k)},
-       |kedges AS (SELECT id_a AS src, id_b AS dst FROM muv
-       |           UNION ALL SELECT id_b, id_a FROM muv),
-       |l0 AS (SELECT DISTINCT src AS vec_id, src AS cluster FROM kedges),
-       |$rounds
-       |SELECT vec_id, cluster FROM l3""".stripMargin
-  }
 
   /** DuckDB twin of Similarity.lshNearDupPairs at its SIZE-ADAPTIVE dup
     * banding (see [[Similarity.dupBanding]]; at the sf0.01 oracle scale
@@ -1945,8 +1907,9 @@ object LlmData {
     "e_lsh_topk" -> lshTopkSql,
     "e_knn_graph" -> knnGraphSql(5),
     "e_knn_incr" -> knnIncrSql(5),
-    "x_knn_clusters" -> knnClustersSql(5),
-    "x_knn_pagerank" -> knnPagerankSql(5, 5),
+    "x_knn_clusters" ->
+      s"WITH ${mutualKnnCtes(5)},\n${Corpus.labelRoundsCtes("muv", "kedges", "vec_id")}\nSELECT vec_id, cluster FROM l3",
+    "x_knn_pagerank" -> Corpus.pagerankSql(mutualKnnCtes(5), "muv", "kedges", "vec_id", 5),
     "x_knn_pagerank_w" -> knnPagerankWeightedSql(5, 5),
     "x_knn_triangles" -> knnTrianglesSql(5),
     "x_knn_clustcoef" -> knnClustcoefSql(5),

@@ -244,6 +244,19 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(labels == (0L until 30L).map(_ -> 0L).toMap)
   }
 
+  test("clusterLabelsConverged outside any CacheScope leaves no cached frame behind") {
+    // Its labels are a checkpointed leaf, so nothing reads the edge cache
+    // after the loop; ids no other spec uses keep the plan unshared.
+    val cm = spark.sharedState.cacheManager
+    def cached(): Int = // numCachedEntries is private[sql]
+      cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+    val pairs = (9001L until 9009L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val before = cached()
+    val labels = CorpusOps.clusterLabelsConverged(pairs).collect()
+    assert(labels.length == 9 && labels.forall(_.getLong(1) == 9001L))
+    assert(cached() == before, s"cached frames: $before before, ${cached()} after")
+  }
+
   test("fixture dedup clusters: 3 fixed rounds reach the converged fixpoint") {
     val pairs = DocDedup.minhashLshPairs(docs)
     pairs.persist()
