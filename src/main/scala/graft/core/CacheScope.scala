@@ -8,11 +8,11 @@ import scala.collection.mutable
   *
   * Operators persist diamond-shaped subplans (consumed 2-3× inside one
   * returned lazy plan) and cannot unpersist them before the caller runs an
-  * action — so the caller owns the release. The Verify/Bench harness and
-  * the year-loop orchestrator honor that contract explicitly; an
-  * interactive session that ignores it accumulates dead blocks until the
-  * storage pool pressures real work (measured: up to 9× per-query
-  * inflation late in a 54-query session).
+  * action — so the caller owns the release. The Verify/Bench harness
+  * honors that contract explicitly and `Runner`'s monthly refresh runs in
+  * a [[scoped]] block; an interactive session that ignores it accumulates
+  * dead blocks until the storage pool pressures real work (measured: up
+  * to 9× per-query inflation late in a 54-query session).
   *
   * [[scoped]] makes the contract structural instead of disciplinary:
   *

@@ -1,10 +1,11 @@
 package graft.job
 
-import graft.core.SchemaCasts
+import graft.core.{CacheScope, SchemaCasts}
 import graft.sink.{PartitionedParquetSink, Sink, WriteMode}
 import graft.sources.{ConfigSources, Tables}
 import graft.views.{Ressarcimento, SuperDesconto}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, year}
 import java.time.LocalDate
 
 /** C14 / EP1 / EP2 orchestration (reference `etl_job.py:28-130`), as pure
@@ -25,7 +26,8 @@ object Runner {
   /** Day-gate (`etl_job.py:89-91`): ressarcimento refreshes on days 1-5. */
   def ressarcimentoDue(today: LocalDate): Boolean = today.getDayOfMonth <= 5
 
-  /** Year loop (`etl_job.py:95`): every year since `firstYear`, inclusive. */
+  /** The due years (the reference's year loop, `etl_job.py:95`): every year
+    * since `firstYear`, inclusive. */
   def ressarcimentoYears(today: LocalDate, firstYear: Int = 2023): Seq[Int] =
     firstYear to today.getYear
 
@@ -64,94 +66,61 @@ object Runner {
                        store: graft.sink.SnapshotStore, today: LocalDate): Long =
     store.commitMerge(dailyFlagship(spark, config, today), Seq("etiqueta"))
 
-  /** EP2: the monthly ressarcimento refresh — one job per year since 2023,
-    * replace on the first WRITTEN year then append, skipping empty years
-    * (`etl_job.py:89-114`). Returns rows written per year.
+  /** EP2: the monthly ressarcimento refresh into a whole-table sink
+    * (`etl_job.py:89-114`): every year since `firstYear`, built as one frame
+    * and published as ONE `Replace`. Returns rows written per year; empty
+    * years are absent from the map.
     *
-    * Documented deviation: the reference ties Replace to the literal first
-    * year (2023); if that year's view were empty, every later year would
-    * append onto the PREVIOUS run's rows — up to 5 duplicate copies per
-    * month under the day-1-to-5 gate. Replace-on-first-written keeps the
-    * refresh idempotent regardless of which years are empty. */
-  /** Shared EP2 year-loop plumbing: per year, build the main view (diamond
-    * intermediates tracked so exactly these — not the whole session cache —
-    * are freed once the year completes), probe emptiness on the CACHED
-    * frame (without the persist, isEmpty would run the whole year plan
-    * twice), and delegate the write decision. `handle` receives None for
-    * an empty year and its returned count lands in the result map. */
-  private def yearLoop(spark: SparkSession, config: Map[String, String], years: Seq[Int])(
-      handle: (Int, Option[DataFrame]) => Option[Long]): Map[Int, Long] = {
-    val sources = ConfigSources.ressarcimento(spark, config)
-    // The supplier view has no year input — build and persist it ONCE for
-    // the whole refresh instead of once per year (the default loop runs
-    // every year since 2023: rebuilding it per year is years-1 redundant
-    // scans of the fornecedor/aporte sources each month).
-    val fornV = Ressarcimento.fornecedores(
-      sources.forn, sources.aporteCab, sources.aporteDet, sources.dimProduto)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      years.flatMap { year =>
-        val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
-        val df: DataFrame = SchemaCasts.castDecimalDouble(
-          Ressarcimento.mainView(sources, year, track = persisted, fornView = fornV))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        persisted += df
-        // The reference writes nothing for an empty year (etl_job.py:102-114).
-        // Cleanup in finally: a failed write must not leak the year's cached
-        // frames into a caller's retry loop.
-        try {
-          val written = handle(year, if (df.isEmpty) None else Some(df))
-          written.map(year -> _)
-        } finally persisted.foreach(_.unpersist(blocking = false))
-      }.toMap
-    } finally fornV.unpersist(blocking = false)
-  }
-
+    * Documented deviation: the reference runs one job per year, replacing
+    * with the first year (2023) and appending the rest. Tied to the literal
+    * first year, an empty 2023 would make every later year append onto the
+    * PREVIOUS run's rows — up to 5 duplicate copies per month under the
+    * day-1-to-5 gate — and a crash after the first year's write would leave
+    * a table holding only that year. One Replace of all years is idempotent
+    * whichever years are empty, leaves the old table or the new one, and
+    * when every year is empty it publishes the empty frame rather than
+    * leave last refresh's rows serving forever. */
   def runRessarcimento(spark: SparkSession, config: Map[String, String], sink: Sink,
                        today: LocalDate, firstYear: Int = 2023): Map[Int, Long] = {
-    // The replace-on-first-written sequencing below is only correct for
-    // WHOLE-TABLE Replace semantics: against a partition-scoped sink the
-    // first Replace would touch one year's partition, leaving every other
-    // year's previous rows to be APPENDED onto — up to 5 duplicate copies
-    // per month under the day-1-to-5 gate. That sink has its own entry
-    // point; reject the miswiring instead of silently duplicating.
+    // A Replace against a partition-scoped sink would touch only the years
+    // present in the frame and keep every emptied year's stale rows; that
+    // sink has its own entry point — reject the miswiring instead.
     require(!sink.isInstanceOf[PartitionedParquetSink],
-      "runRessarcimento's replace-then-append sequencing assumes whole-table " +
-        "Replace; use runRessarcimentoPartitioned for a partition-scoped sink")
+      "runRessarcimento publishes every year as one whole-table Replace; " +
+        "use runRessarcimentoPartitioned for a partition-scoped sink")
     if (!ressarcimentoDue(today)) return Map.empty
-    var replaced = false
-    val written = yearLoop(spark, config, ressarcimentoYears(today, firstYear)) {
-      case (_, Some(df)) =>
-        val mode = if (!replaced) { replaced = true; WriteMode.Replace } else WriteMode.Append
-        Some(sink.write(df, mode))
-      case (_, None) => None
+    refresh(spark, config, ressarcimentoYears(today, firstYear)) { (df, rows) =>
+      sink.write(df, WriteMode.Replace)
+      rows
     }
-    // EVERY year empty → no Replace ever ran and last refresh's rows would
-    // serve forever (the partitioned path deletes stale partitions for
-    // exactly this case). Rebuild-from-scratch semantics require the table
-    // to become empty: write a schema-bearing empty frame (limit 0 folds
-    // to an empty relation at plan time — no source scan).
-    if (written.isEmpty) {
-      val empty = SchemaCasts.castDecimalDouble(Ressarcimento.mainView(
-        ConfigSources.ressarcimento(spark, config), firstYear, reuse = false)).limit(0)
-      sink.write(empty, WriteMode.Replace)
-    }
-    written
   }
 
-  /** EP2 at scale: the year loop against a PARTITION-scoped sink — each
-    * year is written as `Replace` of its own `ano=<year>` partition
-    * (dynamic partition overwrite), so any single year can be re-run alone,
-    * in any order, without touching the others. This removes
-    * [[runRessarcimento]]'s replace-on-first-written sequencing, which
-    * exists only because a whole-table Replace would drop the other years.
+  /** Shared EP2 plumbing: build the view of every year in `years` ONCE,
+    * cached, count its rows per year with one aggregate, and hand both to
+    * `publish` — inside one [[CacheScope]], so the refresh's cached frames
+    * are freed when it returns or throws (a failed write must not leak
+    * them into a caller's retry loop). */
+  private def refresh[T](spark: SparkSession, config: Map[String, String], years: Seq[Int])(
+      publish: (DataFrame, Map[Int, Long]) => T): T = CacheScope.scoped {
+    val df = CacheScope.persisted(SchemaCasts.castDecimalDouble(
+      Ressarcimento.mainView(ConfigSources.ressarcimento(spark, config), years)))
+    val rows = df.groupBy(year(col("periodo"))).count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    publish(df, rows)
+  }
+
+  /** EP2 at scale: the refresh against a PARTITION-scoped sink — one
+    * dynamic partition overwrite stamped with `ano = year(periodo)`
+    * replaces each refreshed year's own `ano=<year>` partition, so any
+    * single year can be re-run alone, in any order, without touching the
+    * others.
     *
     * A year whose refreshed view comes back EMPTY has its partition
-    * DELETED (the whole-table path rebuilds from scratch so empty years
-    * vanish naturally; a partition-scoped dynamic overwrite with zero rows
-    * touches nothing, which would leave the stale rows serving forever).
-    * Deleted years don't appear in the returned map, same as the
-    * whole-table path's skipped years.
+    * DELETED after the write (the whole-table path rebuilds from scratch so
+    * empty years vanish naturally; a partition-scoped dynamic overwrite
+    * with zero rows touches nothing, which would leave the stale rows
+    * serving forever). Deleted years don't appear in the returned map, same
+    * as the whole-table path's empty years.
     *
     * `years` narrows the refresh (e.g. re-run just 2024 after a source
     * correction). An explicit `years` BYPASSES the day-1-to-5 due gate:
@@ -165,20 +134,19 @@ object Runner {
                                   firstYear: Int = 2023,
                                   years: Option[Seq[Int]] = None): Map[Int, Long] = {
     if (years.isEmpty && !ressarcimentoDue(today)) return Map.empty
-    yearLoop(spark, config, years.getOrElse(ressarcimentoYears(today, firstYear))) {
-      case (year, Some(df)) =>
-        Some(sink.write(
-          df.withColumn(sink.partitionCol, org.apache.spark.sql.functions.lit(year)),
-          WriteMode.Replace))
-      case (year, None) =>
-        sink.deletePartition(year)
-        None
+    val due = years.getOrElse(ressarcimentoYears(today, firstYear))
+    refresh(spark, config, due) { (df, rows) =>
+      if (rows.nonEmpty)
+        sink.write(df.withColumn(sink.partitionCol, year(col("periodo"))), WriteMode.Replace)
+      due.filterNot(rows.contains).foreach(sink.deletePartition)
+      rows
     }
   }
 
-  /** EP2 with time travel: the year loop publishing into a
-    * [[SnapshotStore]]. Each year's refresh commits a NEW snapshot
-    * version that replaces only that year's rows
+  /** EP2 with time travel: the refresh publishing into a
+    * [[SnapshotStore]]. The view of every year is built once; each year's
+    * rows, cut from it, commit a NEW snapshot version that replaces only
+    * that year's rows
     * ([[SnapshotStore.commitReplacePartitions]] on the stamped `ano`
     * column) — the snapshot twin of [[runRessarcimentoPartitioned]],
     * with every previous refresh still readable at its version: a bad
@@ -198,20 +166,25 @@ object Runner {
                                firstYear: Int = 2023,
                                years: Option[Seq[Int]] = None): Map[Int, Long] = {
     if (years.isEmpty && !ressarcimentoDue(today)) return Map.empty
-    yearLoop(spark, config, years.getOrElse(ressarcimentoYears(today, firstYear))) {
-      case (year, Some(df)) =>
-        Some(store.commitReplacePartitions(
-          df.withColumn("ano", org.apache.spark.sql.functions.lit(year)), "ano"))
-      case (year, None) =>
-        // Only burn a delete version when the head actually carries the
-        // year: an empty year that is already absent would otherwise
-        // commit a byte-identical version on every due-window run (up to
-        // 5 no-op versions per month), polluting the time-travel lineage.
-        val headHasYear = store.latestVersion.exists { v =>
-          !store.read(v)
-            .filter(org.apache.spark.sql.functions.col("ano") <=> year).isEmpty
-        }
-        if (headHasYear) store.commitDeletePartition("ano", year) else None
+    val due = years.getOrElse(ressarcimentoYears(today, firstYear))
+    refresh(spark, config, due) { (df, rows) =>
+      due.flatMap { y =>
+        val version =
+          if (rows.contains(y))
+            Some(store.commitReplacePartitions(
+              df.filter(year(col("periodo")) === y).withColumn("ano", lit(y)), "ano"))
+          else {
+            // Only burn a delete version when the head actually carries the
+            // year: an empty year that is already absent would otherwise
+            // commit a byte-identical version on every due-window run (up to
+            // 5 no-op versions per month), polluting the time-travel lineage.
+            val headHasYear = store.latestVersion.exists { v =>
+              !store.read(v).filter(col("ano") <=> y).isEmpty
+            }
+            if (headHasYear) store.commitDeletePartition("ano", y) else None
+          }
+        version.map(y -> _)
+      }.toMap
     }
   }
 }

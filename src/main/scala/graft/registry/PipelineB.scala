@@ -26,7 +26,7 @@ object PipelineB {
 
   // ---- Spark side --------------------------------------------------------
 
-  private def src(s: SparkSession, dir: String): Ressarcimento.Sources =
+  private[graft] def src(s: SparkSession, dir: String): Ressarcimento.Sources =
     Ressarcimento.Sources(
       forn = RefFixtures.fornecedor.df(s, dir),
       aporteCab = RefFixtures.aporteCab.df(s, dir),
@@ -47,16 +47,16 @@ object PipelineB {
 
   def coletasDf(s: SparkSession, dir: String): DataFrame = {
     val x = src(s, dir)
-    Ressarcimento.coletas(x.coletaCab, x.coletaDet, x.volumeTipo, Year)
+    Ressarcimento.coletas(x.coletaCab, x.coletaDet, x.volumeTipo, Seq(Year))
   }
 
   def creditoDf(s: SparkSession, dir: String): DataFrame = {
     val x = src(s, dir)
-    Ressarcimento.credito(x.negociacao, x.debito, x.pagamento, x.dimSap, x.forn, Year)
+    Ressarcimento.credito(x.negociacao, x.debito, x.pagamento, x.dimSap, x.forn, Seq(Year))
   }
 
   def ressarcimentoDf(s: SparkSession, dir: String): DataFrame =
-    Ressarcimento.mainView(src(s, dir), Year)
+    Ressarcimento.mainView(src(s, dir), Seq(Year))
 
   // ---- DuckDB oracle CTEs ------------------------------------------------
 

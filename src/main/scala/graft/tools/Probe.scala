@@ -33,23 +33,9 @@ object Probe {
     * warn with the total size and proceed. `SPARK_GRAFT_ALLOW_STALE=1`
     * overrides the refusal for runs that deliberately share scratch. */
   private def scratchGuard(): Unit = {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir", "/tmp"))
-    val stale = Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory &&
-        (f.getName.startsWith("blockmgr-") || f.getName.startsWith("spark-")))
-    if (stale.isEmpty) { println("[scratch-guard] clean: no blockmgr-*/spark-* dirs"); return }
-    // No symlink traversal: a cycle under /tmp/spark-* would recurse to
-    // StackOverflowError, and a link into a large tree would inflate the
-    // reported size — count only regular files, recurse only into real dirs.
-    def sizeOf(d: java.io.File): Long = {
-      val kids = Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
-      kids.map { f =>
-        if (java.nio.file.Files.isSymbolicLink(f.toPath)) 0L
-        else if (f.isDirectory) sizeOf(f)
-        else f.length()
-      }.sum
-    }
-    val bytes = stale.map(sizeOf).sum
+    val stale = staleScratch(new java.io.File(System.getProperty("java.io.tmpdir", "/tmp")))
+    if (stale.isEmpty) { println("[scratch-guard] clean: no blockmgr-*/spark-* dirs hold files"); return }
+    val bytes = stale.map(d => regularFiles(d).map(_.length()).sum).sum
     // "Another JVM might own the scratch" must not count OUR OWN launcher
     // chain: under `sbt runMain` the sbt JVM (and any shell between) is
     // always alive, which made the refusal branch unreachable — stale
@@ -77,6 +63,25 @@ object Probe {
       sys.exit(2)
     }
   }
+
+  /** The `blockmgr-*` / `spark-*` dirs directly under `tmp` that hold at
+    * least one regular file. An empty one (e.g. a configured
+    * `SPARK_LOCAL_DIRS` dir named `spark-local`, after a clean run) eats
+    * no scratch and is not stale. */
+  private[tools] def staleScratch(tmp: java.io.File): Seq[java.io.File] =
+    children(tmp).filter(f => f.isDirectory &&
+      (f.getName.startsWith("blockmgr-") || f.getName.startsWith("spark-")) &&
+      regularFiles(f).nonEmpty)
+
+  private def children(d: java.io.File): Seq[java.io.File] =
+    Option(d.listFiles()).map(_.toSeq).getOrElse(Nil)
+
+  // No symlink traversal: a cycle under /tmp/spark-* would recurse to
+  // StackOverflowError, and a link into a large tree would inflate the
+  // reported size — yield only regular files, recurse only into real dirs.
+  private def regularFiles(d: java.io.File): Iterator[java.io.File] =
+    children(d).iterator.filterNot(f => java.nio.file.Files.isSymbolicLink(f.toPath))
+      .flatMap(f => if (f.isDirectory) regularFiles(f) else Iterator(f).filter(_.isFile))
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2 && Set("reps", "stages")(args(0)),

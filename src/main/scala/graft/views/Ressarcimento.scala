@@ -1,25 +1,29 @@
 package graft.views
 
-import graft.core.{Dedup, Normalize, SchemaCasts}
+import graft.core.{CacheScope, Dedup, Normalize, SchemaCasts}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 /** Pipeline B — "ressarcimento" (reference `utils_ressarcimento.py`):
   * pro-rate supplier credits over product losses by the *parent* supplier's
-  * CNPJ, per month/company/supplier/event/product, for one year.
+  * CNPJ, per month/company/supplier/event/product, within each year.
   *
   * Every view takes its sources as DataFrames (the reference hard-codes
-  * `.env` paths) so tests/fixtures/production bind freely; `filterYear`
-  * mirrors the reference's driver-side year loop (`etl_job.py:95`).
+  * `.env` paths) so tests/fixtures/production bind freely. The year-scoped
+  * views take a SET of `years` where the reference runs one job per year
+  * (`etl_job.py:95`): every per-year quantity is grouped by `ano =
+  * year(periodo)`, so one plan computes all due years and each year's rows
+  * equal that year's own one-year run.
   *
   * Scale design notes:
   *  - keep-one-per-key sites are deterministic window argmaxes
   *    ([[Dedup.top1PerKey]]) — the reference's `orderBy().dropDuplicates()`
   *    is order-nondeterministic under multi-partition shuffles;
-  *  - the year filters keep the reference's `year(ts) = y` semantics but add
-  *    an equivalent half-open range predicate so the parquet scan can prune
-  *    row groups on min/max stats (`year(ts)` alone defeats pushdown);
+  *  - the year filters keep the reference's `year(ts) = y` semantics (as
+  *    `year(ts) IN years`) but add a half-open range predicate over
+  *    [min, max + 1) so the parquet scan can prune row groups on min/max
+  *    stats (`year(ts)` alone defeats pushdown);
   *  - aggregations are partial+final hash aggregates on their group keys —
   *    one shuffle each; the small dims (supplier master, parent map) are
   *    broadcast-sized and AQE picks BHJ for them at runtime;
@@ -29,13 +33,14 @@ import org.apache.spark.sql.types.DoubleType
   */
 object Ressarcimento {
 
-  /** Half-open year range [Jan 1 y, Jan 1 y+1) — pushdown-friendly companion
-    * of `year(ts) = y` (same rows; parquet row-group stats can prune). */
-  private def yearRange(c: Column, y: Int): Column =
-    c >= lit(s"$y-01-01 00:00:00").cast("timestamp_ntz") &&
-      c < lit(s"${y + 1}-01-01 00:00:00").cast("timestamp_ntz")
-
-  private def yearIs(c: Column, y: Int): Column = year(c) === y && yearRange(c, y)
+  /** `year(c) IN years`, plus the half-open range [Jan 1 min, Jan 1 max+1)
+    * as its pushdown-friendly companion (same rows; parquet row-group stats
+    * can prune). No years selects nothing, folded away at plan time. */
+  private def yearIn(c: Column, years: Seq[Int]): Column =
+    if (years.isEmpty) lit(false)
+    else year(c).isin(years: _*) &&
+      c >= lit(s"${years.min}-01-01 00:00:00").cast("timestamp_ntz") &&
+      c < lit(s"${years.max + 1}-01-01 00:00:00").cast("timestamp_ntz")
 
   /** C10 inner view: one commercial-supplier name per depot supplier code
     * (reference `utils_ressarcimento.py:32-50`; `dropDuplicates` made
@@ -91,15 +96,15 @@ object Ressarcimento {
         Normalize.stripNormalize(coalesce(col("forn_comercial"), lit("SEM FORNECEDOR PRINCIPAL"))))
   }
 
-  /** C11 view_coletas (`utils_ressarcimento.py:100-126`): yearly losses per
-    * month/company/supplier/event/product. Group keys are computed
-    * expressions (A1). */
-  def coletas(cab: DataFrame, det: DataFrame, vol: DataFrame, filterYear: Int): DataFrame = {
+  /** C11 view_coletas (`utils_ressarcimento.py:100-126`): losses of the
+    * given years per month/company/supplier/event/product. Group keys are
+    * computed expressions (A1). */
+  def coletas(cab: DataFrame, det: DataFrame, vol: DataFrame, years: Seq[Int]): DataFrame = {
     val custoProd = col("rcde_vl_produto") - coalesce(col("rcde_vl_desconto"), lit(0))
     val totais = col("rcde_qt_produto") * custoProd
     val empresa = when(col("rcde_cd_deposito") > 5, "EF").otherwise("PM")
     cab
-      .where(yearIs(col("rcca_dh_cadastro"), filterYear))
+      .where(yearIn(col("rcca_dh_cadastro"), years))
       .join(det, Seq("id_recuperavel_coleta_cab"))
       .join(vol, Seq("id_recuperavel_tipo_volume"))
       .groupBy(
@@ -128,11 +133,11 @@ object Ressarcimento {
   /** C12 view_credito (`utils_ressarcimento.py:129-184`): credits from
     * negotiations (A2) ∪ SAP (A3), re-aggregated (A4/O2). */
   def credito(neg: DataFrame, deb: DataFrame, pag: DataFrame, sap: DataFrame,
-              forn: DataFrame, filterYear: Int): DataFrame = {
+              forn: DataFrame, years: Seq[Int]): DataFrame = {
     val viewCred = neg
       .join(deb, Seq("id_negociacao_aporte"))
       .join(pag, Seq("id_debito_fornecedor"))
-      .filter(yearIs(col("data_hora_cadastro"), filterYear))
+      .filter(yearIn(col("data_hora_cadastro"), years))
       .filter(col("id_destino_negociacao").isin(IdDestino: _*))
       .groupBy(
         date_trunc("month", col("data_hora_cadastro")).as("periodo"),
@@ -142,7 +147,7 @@ object Ressarcimento {
 
     val viewSap = sap
       .filter(col("flag_credito") === 1)
-      .filter(yearIs(col("data_credito"), filterYear))
+      .filter(yearIn(col("data_credito"), years))
       .join(fornSap(forn), Seq("fornecedor_principal_sap"))
       .groupBy(
         date_trunc("month", col("data_credito")).as("periodo"),
@@ -181,6 +186,11 @@ object Ressarcimento {
     * `cnpj_forn_pai` (J6/O3), and a final null-fill of every float column
     * (P8).
     *
+    * All `years` in one plan: the reference's totals and outer assembly are
+    * per year (one job per year), so here they group and join on (`ano`,
+    * `cnpj_forn_pai`) with `ano = year(periodo)`. A year's rows are exactly
+    * what `mainView(s, Seq(year))` returns; the output carries no `ano`.
+    *
     * Two deliberate physical deviations from the reference's logical shape,
     * both value-identical (oracle-checked) and both load-bearing at 100 TB:
     *
@@ -201,40 +211,20 @@ object Ressarcimento {
     *     with no losses) stays an explicit anti join — against the broadcast
     *     per-parent loss keys, so the credit rows never shuffle either.
     *
-    * `reuse` (default on) persists the diamond-shaped intermediates
-    * (`fornecedores`, the loss rows, the credit view) with MEMORY_AND_DISK —
-    * the assembly consumes each 2-3 times and Catalyst has no cross-join
-    * common-subplan reuse. At 100 TB the cached views are orders of magnitude
-    * smaller than their inputs (year-filtered aggregates and a dim); pass
-    * `reuse = false` for a purely declarative plan. */
-  def mainView(s: Sources, filterYear: Int, reuse: Boolean = true,
-               track: scala.collection.mutable.Buffer[DataFrame] = null,
-               fornView: DataFrame = null): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // `track` (optional) collects the persisted intermediates so callers
-    // like the year-loop orchestrator can unpersist exactly these — not the
-    // whole session cache — once the year's write completes.
-    def shared(df: DataFrame): DataFrame =
-      if (!reuse) df
-      else {
-        val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-        if (track != null) track += cached
-        cached
-      }
+    * The diamond-shaped intermediates (`fornecedores`, the loss rows, the
+    * credit view) are persisted through [[CacheScope.persisted]] — the
+    * assembly consumes each 2-3 times and Catalyst has no cross-join
+    * common-subplan reuse; an enclosing [[CacheScope.scoped]] frees them. */
+  def mainView(s: Sources, years: Seq[Int]): DataFrame = {
     val dim = dimNamed(s.dimProduto)
-    // The supplier view is YEAR-INVARIANT (no filterYear input): a caller
-    // looping over years passes it in pre-persisted via `fornView` so the
-    // fornecedor/aporte scan-and-aggregate runs once per refresh, not once
-    // per year; lifetime then belongs to that caller, so it is NOT tracked.
-    val fornV =
-      if (fornView != null) fornView
-      else shared(fornecedores(s.forn, s.aporteCab, s.aporteDet, s.dimProduto))
-    val coleta = coletas(s.coletaCab, s.coletaDet, s.volumeTipo, filterYear)
-    val cred = credito(s.negociacao, s.debito, s.pagamento, s.dimSap, s.forn, filterYear)
+    val fornV = CacheScope.persisted(fornecedores(s.forn, s.aporteCab, s.aporteDet, s.dimProduto))
+    val coleta = coletas(s.coletaCab, s.coletaDet, s.volumeTipo, years)
+    val cred = credito(s.negociacao, s.debito, s.pagamento, s.dimSap, s.forn, years)
+    val perParent = Seq("ano", "cnpj_forn_pai")
 
     // Loss rows enriched with dims — the reference's cols_view minus its
     // window column (see deviation 1 above).
-    val colsBase = shared(coleta.as("c")
+    val colsBase = CacheScope.persisted(coleta.as("c")
       .join(dim.as("d"), col("c.cod_prod") === col("d.codigo_produto"))
       .join(fornV, Seq("cod_forn"))
       .selectExpr(
@@ -242,20 +232,22 @@ object Ressarcimento {
         "d.nome_produto",
         "forn_nm",
         "cnpj_forn_pai",
-        "d.fornecedor_comercial as forn_comercial"))
+        "d.fornecedor_comercial as forn_comercial")
+      .withColumn("ano", year(col("periodo"))))
 
     // W2 rewrite: per-parent loss totals, broadcast back onto the loss rows.
     // Left join (not inner) preserves window-exact NULL semantics: a parent
     // whose every perdas is NULL gets grupo_perda NULL, never a dropped row.
-    val grupoPerda = colsBase.groupBy("cnpj_forn_pai").agg(sum("perdas").as("grupo_perda"))
-    val colsView = colsBase.join(broadcast(grupoPerda), Seq("cnpj_forn_pai"), "left")
+    val grupoPerda = colsBase.groupBy(perParent.map(col): _*).agg(sum("perdas").as("grupo_perda"))
+    val colsView = colsBase.join(broadcast(grupoPerda), perParent, "left")
 
-    val credsView = shared(cred
+    val credsView = CacheScope.persisted(cred
       .join(fornV, Seq("cod_forn"))
       .groupBy("periodo", "empresa", "cod_forn", "forn_nm", "cnpj_forn_pai", "forn_comercial")
-      .agg(sum("credito").as("credito")))
+      .agg(sum("credito").as("credito"))
+      .withColumn("ano", year(col("periodo"))))
 
-    val credsGroup = credsView.groupBy("cnpj_forn_pai").agg(sum("credito").as("credito"))
+    val credsGroup = credsView.groupBy(perParent.map(col): _*).agg(sum("credito").as("credito"))
 
     val totalRessarcimento = coalesce(
       (col("perdas") / ifnull(col("grupo_perda"), lit(0))) * col("credito"),
@@ -266,20 +258,21 @@ object Ressarcimento {
     // per-parent credit totals; matched rows pro-rate, unmatched get
     // coalesce's 0 terminal — bit-identical to anti-branch + null-fill.
     val lossBranches = colsView
-      .join(broadcast(credsGroup), Seq("cnpj_forn_pai"), "left")
+      .join(broadcast(credsGroup), perParent, "left")
       .withColumn("ressarcimento", totalRessarcimento)
 
-    // Branch 2: credits whose parent has no losses at all. The anti side only
-    // needs the DISTINCT loss parent keys — grupoPerda already materializes
-    // exactly those (one row per parent), so broadcast it rather than the
-    // per-loss-row key column, whose size grows with the fact table.
+    // Branch 2: credits whose parent has no losses that year. The anti side
+    // only needs the DISTINCT loss parent keys — grupoPerda already
+    // materializes exactly those (one row per year and parent), so broadcast
+    // it rather than the per-loss-row key column, whose size grows with the
+    // fact table.
     val creditOnly = credsView
-      .join(broadcast(grupoPerda.select("cnpj_forn_pai")), Seq("cnpj_forn_pai"), "left_anti")
+      .join(broadcast(grupoPerda.select(perParent.map(col): _*)), perParent, "left_anti")
       .withColumn("ressarcimento", col("credito"))
 
     val rstView = lossBranches
       .unionByName(creditOnly, allowMissingColumns = true)
-      .drop("credito", "grupo_perda")
+      .drop("ano", "credito", "grupo_perda")
 
     SchemaCasts.fillFloatNulls(rstView)
   }

@@ -1,10 +1,8 @@
 package graft.views
 
 import graft.core.{Dedup, Normalize, SchemaCasts}
-import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import java.time.LocalDate
 
 /** Pipeline A — "super desconto" (reference `utils_superdesconto.py` +
   * `etl_job.py:28-68`): reconcile discount-coupon sales from two POS feeds
@@ -48,12 +46,6 @@ object SuperDesconto {
       .withColumn(colEtiqueta, Normalize.etiqueta(colEtiqueta))
       .withColumnsRenamed(columns.zip(colsRename).toMap)
   }
-
-  /** C6 + S3: the production form — day-range multi-file scan then canonicalize
-    * (reference `view_pre_venda`, `utils_superdesconto.py:69-85`). */
-  def preVendaScan(spark: SparkSession, bucket: String, system: String,
-                   start: LocalDate, end: LocalDate, columns: Seq[String]): DataFrame =
-    preVenda(Tables.dayRangeScan(spark, bucket, system, start, end), columns)
 
   /** C7 view_cupom (`utils_superdesconto.py:88-99`): union both feeds, keep
     * the top-discount sale per etiqueta. The reference orders only by

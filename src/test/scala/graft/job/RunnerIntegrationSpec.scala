@@ -1,12 +1,15 @@
 package graft.job
 
 import graft.TestSpark
+import graft.core.PlanShapes
 import graft.fixtures.RefFixtures
-import graft.sink.{ParquetSink, PartitionedParquetSink, SnapshotStore, WriteMode}
+import graft.sink.{ParquetSink, PartitionedParquetSink, Sink, SnapshotStore, WriteMode}
 import java.nio.file.Files
 import java.time.LocalDate
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.mutable
 
 /** End-to-end EP1/EP2: config map → day-range/path scans → views → sink,
   * exactly the production wiring (`etl_job.py:28-114`), over temp copies of
@@ -228,5 +231,54 @@ class RunnerIntegrationSpec extends AnyFunSuite {
     Runner.runDaily(spark, config, sink, day2)
     assert(sink.read().select("etiqueta").collect().map(_.getString(0)).toSet == headKeys)
     assert(sink.read().count() == store.readLatest().count())
+  }
+
+  /** The Pipeline B sources written under a fresh temp root; returns the
+    * root and the config map that binds them. */
+  private def monthlyLayout(prefix: String): (String, Map[String, String]) = {
+    val root = Files.createTempDirectory(prefix).toString
+    val keys = Seq("fornecedor", "aporte_cab", "aporte_det", "dim_produto", "coleta_cab",
+      "coleta_det", "volume_tipo", "negociacao", "debito", "pagamento", "dim_sap")
+    keys.foreach { k =>
+      RefFixtures.byName(k).df(spark, sfDir).write.mode("overwrite").parquet(s"$root/$k")
+    }
+    (root, keys.map(k => k -> s"$root/$k").toMap)
+  }
+
+  test("runRessarcimento publishes every year with ONE whole-table Replace") {
+    val (root, config) = monthlyLayout("graft_monthly_once")
+    val inner = new ParquetSink(spark, s"$root/sink_rst")
+    val modes = mutable.Buffer.empty[WriteMode]
+    val sink = new Sink {
+      def mergeByKey(incoming: DataFrame, keys: Seq[String]): Long = inner.mergeByKey(incoming, keys)
+      def write(incoming: DataFrame, mode: WriteMode): Long = { modes += mode; inner.write(incoming, mode) }
+      def applyCdc(changes: DataFrame, keys: Seq[String], opCol: String, seqCol: String): Long =
+        inner.applyCdc(changes, keys, opCol, seqCol)
+      def read(): DataFrame = inner.read()
+      def exists: Boolean = inner.exists
+    }
+    val written = Runner.runRessarcimento(spark, config, sink, LocalDate.of(1998, 8, 3), firstYear = 1997)
+    assert(written.keySet == Set(1997, 1998))
+    assert(modes == Seq(WriteMode.Replace))
+    assert(inner.read().count() == written.values.sum)
+  }
+
+  test("a refresh runs as many Spark jobs for 4 years as for 2") {
+    val (root, config) = monthlyLayout("graft_monthly_flat")
+    val today = LocalDate.of(1998, 8, 3)
+    def jobs(firstYear: Int, refresh: (Int, String) => Map[Int, Long]): Int = {
+      var written = Map.empty[Int, Long]
+      val n = PlanShapes.jobsRun(spark) { written = refresh(firstYear, s"$root/sink_$firstYear") }
+      assert(written.keySet == (firstYear to 1998).toSet)
+      n
+    }
+    val wholeTable = (fy: Int, path: String) =>
+      Runner.runRessarcimento(spark, config, new ParquetSink(spark, path), today, fy)
+    val partitioned = (fy: Int, path: String) => Runner.runRessarcimentoPartitioned(spark, config,
+      new PartitionedParquetSink(spark, path + "_part", "ano"), today, fy)
+    for (refresh <- Seq(wholeTable, partitioned)) {
+      val (two, four) = (jobs(1997, refresh), jobs(1995, refresh))
+      assert(two == four, s"2 years ran $two jobs, 4 years ran $four")
+    }
   }
 }

@@ -24,6 +24,15 @@ class ProbeSpec extends AnyFunSuite {
     assert(lines.exists(_.trim.startsWith("stage ")), lines)
   }
 
+  test("scratch guard: an empty spark-* dir is not stale, one holding a file is") {
+    val tmp = java.nio.file.Files.createTempDirectory("probe_scratch")
+    java.nio.file.Files.createDirectories(tmp.resolve("spark-local/blockmgr-0"))
+    val x = java.nio.file.Files.createDirectories(tmp.resolve("spark-x/sub"))
+    java.nio.file.Files.write(x.resolve("shuffle_0.data"), Array[Byte](1))
+    java.nio.file.Files.createDirectories(tmp.resolve("other"))
+    assert(Probe.staleScratch(tmp.toFile).map(_.getName) == Seq("spark-x"))
+  }
+
   test("unknown names and modes are refused up front") {
     val e = intercept[IllegalArgumentException](Probe.main(Array("reps", "a_flagship", "a_flagshp")))
     assert(e.getMessage.contains("unknown query: a_flagshp"))

@@ -1,7 +1,9 @@
 package graft.views
 
 import graft.TestSpark
+import graft.core.CacheScope
 import graft.registry.PipelineB
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -37,5 +39,42 @@ class RessarcimentoSpec extends AnyFunSuite {
     //   losses-only (ressarcimento=0 null-filled)
     val bad = rst.filter(col("evento").isNull && col("perdas") =!= 0.0).count()
     assert(bad == 0L, "credit-only branch must carry null losses payload")
+  }
+
+  test("one plan over 1995-2001 equals the union of the one-year views, bit for bit") {
+    // The raw fixture has rows in every year and no credit-only parent, so
+    // those two cases are cut from it by dropping fact rows by year: 1999
+    // loses all facts (an empty year) and 2000 keeps its credits but loses
+    // its losses (each credited parent is credit-only that year while it
+    // has losses in the other years).
+    val x = PipelineB.src(spark, sfDir)
+    def without(df: DataFrame, ts: String, ys: Int*) = df.filter(!year(col(ts)).isin(ys: _*))
+    val s = x.copy(
+      coletaCab = without(x.coletaCab, "rcca_dh_cadastro", 1999, 2000),
+      pagamento = without(x.pagamento, "data_hora_cadastro", 1999),
+      dimSap = without(x.dimSap, "data_credito", 1999))
+    val years = 1995 to 2001
+    // Doubles as raw bits, so "equal" means bit-identical.
+    def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    }).sortBy(_.toString)
+    CacheScope.scoped {
+      val all = Ressarcimento.mainView(s, years).cache()
+      val perYear = years.map(y => y -> rows(Ressarcimento.mainView(s, Seq(y)))).toMap
+      assert(rows(all) == years.flatMap(perYear).sortBy(_.toString))
+
+      // The fixture carries each case the per-year grouping must get right.
+      assert(perYear(1999).isEmpty, "an empty year")
+      val byYear = all.withColumn("ano", year(col("periodo")))
+      val creditOnly = byYear.filter(col("cod_prod").isNull)
+      assert(creditOnly.filter(col("ressarcimento") =!= 0.0).count() > 0, "a credit-only parent")
+      val lossYears = byYear.filter(col("cod_prod").isNotNull)
+        .groupBy("cnpj_forn_pai").agg(countDistinct("ano").as("n"))
+      assert(lossYears.filter(col("n") >= 2).count() > 0, "a parent with rows in two years")
+      assert(creditOnly.join(lossYears, "cnpj_forn_pai").count() > 0,
+        "a parent credit-only in one year with losses in another")
+      all.unpersist()
+    }
   }
 }
