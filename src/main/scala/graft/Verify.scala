@@ -3,6 +3,13 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The entries of `all` a run dumps: every entry when `only` is empty
+    * (the full run), else exactly the named ones — so a subset run's
+    * oracle_sql.json carries only its own oracles and a DuckDB check of it
+    * runs nothing else. */
+  def selected[V](all: Map[String, V], only: Set[String]): Map[String, V] =
+    if (only.isEmpty) all else all.filter { case (n, _) => only(n) }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional trailing args = query-name filter for fast local iteration
@@ -14,10 +21,7 @@ object Verify {
     val spark = graft.core.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val selected =
-      if (only.nonEmpty) SparkEntry.queries.filter { case (n, _) => only(n) }
-      else SparkEntry.queries
-    selected.foreach { case (name, fn) =>
+    selected(SparkEntry.queries, only).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -41,7 +45,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = selected(SparkEntry.oracleSql, only)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

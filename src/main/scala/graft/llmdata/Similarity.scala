@@ -1084,13 +1084,7 @@ object Similarity {
     * to NN-Descent: dst vectors ride the ≤ 2k·N neighbor frame into a
     * pivot-co-partitioned cache, proposals are scored inline by the
     * pivot self-join, known edges reuse their stored cosines — no pair
-    * ever crosses an exchange with a vector attached); `gridScore =
-    * true` switches both stages to the P×P grid cogroup
-    * ([[scorePairsGrid]], seed via grid-scored [[pairCandIds]] output)
-    * with [[verifyPairsGrid]]'s bit-identical-cosine contract — the
-    * network shape (pairs cross at 20 B/row) for cluster deployments to
-    * choose BY MEASUREMENT — see the design note on [[scorePairsGrid]]
-    * tying that choice to the stored-stats decision machinery.
+    * ever crosses an exchange with a vector attached).
     * One round is the registered default: seeds at constant occupancy
     * already give high recall and each extra round costs a full
     * score-and-rank pass (the WWW 2011 convergence loop is for random
@@ -1109,10 +1103,9 @@ object Similarity {
     * (real-corpus) neighbors at high cosine do not pay. */
   def knnGraph(embeddings: DataFrame, k: Int = 5,
                planes: Int = 0, bandBits: Int = 0,
-               nHint: Long = 0L, descentRounds: Int = 1,
-               gridScore: Boolean = false): DataFrame =
-    knnGraphShaped(embeddings, k, planes, bandBits, nHint, descentRounds,
-      gridScore, lightOverride = None)
+               nHint: Long = 0L, descentRounds: Int = 1): DataFrame =
+    knnGraphRankedShaped(embeddings, k, planes, bandBits, nHint, descentRounds,
+      lightOverride = None).drop("cos")
 
   /** [[knnGraph]] keeping each edge's exact cosine — the public form of
     * [[knnGraphRankedShaped]] for consumers that VERIFY or WEIGHT the
@@ -1127,7 +1120,7 @@ object Similarity {
   def knnGraphWithCos(embeddings: DataFrame, k: Int = 5,
                       nHint: Long = 0L, descentRounds: Int = 1): DataFrame =
     knnGraphRankedShaped(embeddings, k, 0, 0, nHint, descentRounds,
-      gridScore = false, lightOverride = None)
+      lightOverride = None)
       .select(col("vec_id"), col("nn_id"), col("cos"))
 
   /** Corpus-size gate for [[knnGraph]]'s scoring machinery. At or below
@@ -1152,29 +1145,21 @@ object Similarity {
     * applied to plan shape. */
   val KnnLightMaxN: Long = 1L << 14
 
-  /** [[knnGraph]] with the size gate overridable — `lightOverride`
-    * forces the light (`Some(true)`) or heavy (`Some(false)`) shape
-    * regardless of corpus size, so specs can pin shape equality at
-    * fixture scale. `None` = gate on `nEff` vs [[KnnLightMaxN]]; a
-    * pinned-config call without a hint (nEff = 0) takes the heavy shape
-    * — the gate never spends a count job the operator wasn't already
-    * spending. */
-  private[llmdata] def knnGraphShaped(embeddings: DataFrame, k: Int,
-               planes: Int, bandBits: Int,
-               nHint: Long, descentRounds: Int,
-               gridScore: Boolean, lightOverride: Option[Boolean]): DataFrame =
-    knnGraphRankedShaped(embeddings, k, planes, bandBits, nHint, descentRounds,
-      gridScore, lightOverride).drop("cos")
-
-  /** [[knnGraphShaped]] keeping each edge's exact cosine — the form the
-    * stored-graph lifecycle needs ([[buildKnnGraphIndex]]): an append
-    * merges new candidate edges against the STORED scores, so the store
-    * must carry them (re-scoring the whole graph per append would be the
-    * rebuild the increment exists to avoid). */
+  /** [[knnGraph]] keeping each edge's exact cosine, with the size gate
+    * overridable. The cosine is the form the stored-graph lifecycle needs
+    * ([[buildKnnGraphIndex]]): an append merges new candidate edges
+    * against the STORED scores, so the store must carry them (re-scoring
+    * the whole graph per append would be the rebuild the increment exists
+    * to avoid). `lightOverride` forces the light (`Some(true)`) or heavy
+    * (`Some(false)`) shape regardless of corpus size, so specs can pin
+    * shape equality at fixture scale. `None` = gate on `nEff` vs
+    * [[KnnLightMaxN]]; a pinned-config call without a hint (nEff = 0)
+    * takes the heavy shape — the gate never spends a count job the
+    * operator wasn't already spending. */
   private[llmdata] def knnGraphRankedShaped(embeddings: DataFrame, k: Int,
                planes: Int, bandBits: Int,
                nHint: Long, descentRounds: Int,
-               gridScore: Boolean, lightOverride: Option[Boolean]): DataFrame = {
+               lightOverride: Option[Boolean]): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(descentRounds >= 0, s"descentRounds must be >= 0, got $descentRounds")
     require((planes > 0) == (bandBits > 0),
@@ -1182,7 +1167,7 @@ object Similarity {
     val n = graft.core.CacheScope.persisted(withNorm(embeddings))
     val nEff = if (nHint > 0) nHint else if (planes > 0) 0L else n.count()
     val (p, r) = if (planes > 0) (planes, bandBits) else knnBanding(nEff)
-    // Scoring shapes, all bit-identical (KnnSeedScoreSpec / KnnGridScoreSpec):
+    // Scoring shapes, all bit-identical (KnnSeedScoreSpec / KnnShapeGateSpec):
     //  - SEED, default: bucket-local ([[scoreSeedPairsInBuckets]]) — the
     //    cosine is computed INSIDE the band-bucket self-join where the
     //    colliding vectors are already co-located, so the exchange is
@@ -1190,19 +1175,11 @@ object Similarity {
     //    an exchanged dataset. The former join-form seed shipped every
     //    candidate through a pair×vector-bytes re-attach (~2-3·10⁸ pairs
     //    at 2 M vectors = the measured >78 GB sf100 wall); it survives as
-    //    [[seedPairsJoinForm]] for the bit-identity contract spec.
-    //  - REFINEMENT: join re-attach by default — the pool is k-budgeted
-    //    (≤ N·(2k²+k) pairs), measured the single-box winner at sf10
-    //    (269 s vs the grid's 340 s before the canonical halving; the
-    //    grid's object-serialized cogroup sort spilled past this box's
-    //    ~78 GB scratch after it). `gridScore = true` switches BOTH
-    //    stages to the P×P grid ([[scorePairsGrid]]) — pairs cross the
-    //    network at 20 B/row vs pair×vector bytes, the shape for
-    //    deployments where the exchange is network-bound, chosen by
-    //    measurement, not by an in-library size switch that single-box
-    //    evidence contradicts.
-    val grid = gridScore
-    val light = lightOverride.getOrElse(!grid && nEff > 0 && nEff <= KnnLightMaxN)
+    //    [[seedPairsJoinForm]], the bit-identity reference and the light seed.
+    //  - REFINEMENT: pivot-local by default (below); the light shape
+    //    scores the k-budgeted (≤ N·(2k²+k) pairs) pool through
+    //    [[scoreEdges]]' join re-attach.
+    val light = lightOverride.getOrElse(nEff > 0 && nEff <= KnnLightMaxN)
     // Cosine is symmetric (bit-identical either way: per-dim products
     // commute, the fold order over dims is fixed), so every pair is
     // scored ONCE in canonical (lo, hi) order and the scored frame is
@@ -1255,15 +1232,11 @@ object Similarity {
         // the self-join and both re-attaches exchange-free.
         rankMirrored(seedPairsJoinForm(n, p, r, bcast = true))
       else {
-        val (sc0, seedCache) =
-          if (grid) (scoreEdges(pairCandIds(bandsOf(n, p, r, 0, 0.0))
-              .select(col("id_a").as("src"), col("id_b").as("dst")), n, grid = true),
-            Option.empty[DataFrame])
-          else { val (s, c) = scoreSeedPairsInBuckets(n, p, r); (s, Some(c)) }
+        val (sc0, seedCache) = scoreSeedPairsInBuckets(n, p, r)
         val g0 = rankMirrored(sc0)
         // rankMirrored materialized the seed top-k, so the scorer's
         // signature cache is no longer reachable from any live plan.
-        seedCache.foreach(_.unpersist(blocking = false))
+        seedCache.unpersist(blocking = false)
         g0
       }
     }
@@ -1296,25 +1269,20 @@ object Similarity {
       val bU = b.select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"), col("cos"))
       val pool =
-        if (grid || light) {
-          // Grid shape: propose id pairs, dedup, ship them at 20 B/row
-          // into the P×P scorer — pairs ARE the exchanged dataset here,
-          // which is the grid's whole point (network-bound clusters).
-          // The LIGHT shape shares the pool construction but scores it
-          // with the join re-attach (scoreEdges' default): at gated N the
-          // k-budgeted pool is small enough that the pivot cache's
-          // repartition + persist are pure floor, and the join form is
-          // the established bit-identity reference for the pivot-local
-          // scores (cos is a pure function of the pair, canonical (lo,
-          // hi) operand order on every path). Light broadcasts the
-          // k-budgeted (≤ 2k·N-row) build sides so the proposal
-          // self-join and the re-attach plan exchange-free.
-          val c1 = b.as("x").join(
-              if (light) broadcast(b.as("y")) else b.as("y"),
+        if (light) {
+          // LIGHT shape: propose id pairs, dedup, and score them with the
+          // join re-attach ([[scoreEdges]]): at gated N the k-budgeted
+          // pool is small enough that the pivot cache's repartition +
+          // persist are pure floor, and the join form is the established
+          // bit-identity reference for the pivot-local scores (cos is a
+          // pure function of the pair, canonical (lo, hi) operand order
+          // on every path). Broadcasting the k-budgeted (≤ 2k·N-row)
+          // build sides plans the proposal self-join and the re-attach
+          // exchange-free.
+          val c1 = b.as("x").join(broadcast(b.as("y")),
               col("x.src") === col("y.src") && col("x.dst") < col("y.dst"))
             .select(col("x.dst").as("src"), col("y.dst").as("dst"))
-          scoreEdges(bU.select("src", "dst").union(c1).distinct(), n,
-            grid = grid, bcast = light)
+          scoreEdges(bU.select("src", "dst").union(c1).distinct(), n, bcast = true)
         } else {
           // PIVOT-LOCAL proposal scoring (the seed's bucket-local trick
           // applied to NN-Descent): proposals are generated per pivot
@@ -1405,7 +1373,7 @@ object Similarity {
       .select("vec_id", "ed", "nrm", "__bands")
       .write.mode("overwrite").parquet(s"$indexDir/corpus")
     knnGraphRankedShaped(embeddings, k, p, r, nEff, descentRounds,
-        gridScore = false, lightOverride = None)
+        lightOverride = None)
       .write.mode("overwrite").parquet(s"$indexDir/edges")
     Seq((p, r, k)).toDF("planes", "band_bits", "k")
       .write.mode("overwrite").parquet(s"$indexDir/meta")
@@ -1611,105 +1579,25 @@ object Similarity {
     spark.read.parquet(s"$indexDir/edges").select("vec_id", "rank", "nn_id")
 
   /** Exact cosine over (src, dst) edge ids — the re-attach + score step
-    * shared by [[knnGraph]]'s seeding and refinement passes. `grid`
-    * switches to [[scorePairsGrid]]; both forms are bit-identical
-    * (KnnGridScoreSpec pins it on banding candidates). `bcast` (the
-    * small-N light shape) broadcasts the vector side of both re-attach
-    * joins — a physical-plan hint only, the join output is identical;
-    * never set it above [[KnnLightMaxN]] where the vector frame stops
-    * being broadcast-sized. */
+    * of [[knnGraph]]'s light shape (seed via [[seedPairsJoinForm]] and
+    * refinement) and of the append's light shape. `bcast` (the small-N
+    * light shape) broadcasts the vector side of both re-attach joins — a
+    * physical-plan hint only, the join output is identical; never set it
+    * above [[KnnLightMaxN]] where the vector frame stops being
+    * broadcast-sized. Degenerate inputs: a zero norm divides by zero,
+    * which Spark's `Divide` returns as NULL (ranks last under desc, never
+    * NaN); a NULL or dimension-mismatched embedding keeps its pair with a
+    * NULL cos (`array_dot` is NULL there); a pair referencing an id
+    * absent from `n` drops in the inner joins (KnnSeedScoreSpec pins all
+    * three). */
   private[llmdata] def scoreEdges(edges: DataFrame, n: DataFrame,
-                         grid: Boolean = false, bcast: Boolean = false): DataFrame =
-    if (grid) scorePairsGrid(edges, n)
-    else {
-      def side(d: DataFrame) = if (bcast) broadcast(d) else d
-      edges
-        .join(side(n.select(col("vec_id").as("src"), col("ed").as("__ea"), col("nrm").as("__na"))), "src")
-        .join(side(n.select(col("vec_id").as("dst"), col("ed").as("__eb"), col("nrm").as("__nb"))), "dst")
-        .select(col("src"), col("dst"),
-          expr(sparkCosPre("__ea", "__eb", "__na", "__nb")).as("cos"))
-    }
-
-  /** Grid-blocked exact-cosine SCORING of (src, dst) edge ids — the
-    * [[verifyPairsGrid]] shape emitting the cosine instead of applying a
-    * threshold, for consumers that rank (the k-NN graph's top-k) rather
-    * than filter. Same cell scheme (pairs shuffle at ~20 B/row keyed by
-    * (src mod P)·P + dst mod P; vectors replicate P ways, never attached
-    * to a pair across an exchange), same JVM fold (dim-ascending add
-    * order — [[graft.functions.ArrayDot]]'s, so cosines are bit-identical
-    * to the join form's `array_dot`), and the same degenerate-input
-    * contract: a zero norm divides by zero, which the join form's Spark
-    * `Divide` returns as NULL — mirrored here with an Option (None → SQL
-    * NULL), so desc-ordered ranking places it last on both paths (the
-    * JVM's NaN would sort FIRST under Spark's desc, silently promoting
-    * zero-norm vectors into every top-k — do not "simplify" the Option
-    * away). Pairs referencing ids absent from `n` drop, as the join
-    * form's inner joins drop them; pairs whose id EXISTS but whose
-    * embedding is NULL or dimension-mismatched are KEPT with a NULL cos
-    * — the join form's inner joins succeed on such rows and `array_dot`
-    * returns NULL on a null or length-mismatched input, so dropping them
-    * here would be an edge-set divergence from the bit-identical
-    * contract (a null nrm rides as a 0.0 placeholder through the tuple
-    * encoder — it is only ever read when both embeddings are non-null
-    * same-length arrays, which forces nrm non-null).
-    *
-    * Design note — grid vs join as a STATS-LOOP DECISION: `gridScore`
-    * stays caller-owned because the two shapes win in different regimes
-    * and the single-box evidence is settled (join 269 s vs grid 340 s at
-    * 200 k vectors; the grid's object-serialized cogroup sort spills
-    * where the join's unsafe-row exchange doesn't). The regime where the
-    * grid wins — a network-bound cluster exchange, where shipping pairs
-    * at 20 B/row beats shipping pair×vector bytes — is exactly the kind
-    * of choice [[graft.sources.TableStats.joinStrategyChoice]] already
-    * makes from standing stats: a deployment with per-link byte costs
-    * would fold `rowCount(pairs) × vecBytes` vs `rowCount(vectors) × P ×
-    * vecBytes + 20 × rowCount(pairs)` into the same stored-stats
-    * decision frame and set `gridScore` from the estimate, the way
-    * [[graft.core.JoinPlanner.autoJoin]] turns the join-strategy
-    * decision into a plan shape. Wiring that here is deliberately NOT
-    * done: this box cannot measure the network-bound regime, and an
-    * in-library size switch would contradict the measurement we do have. */
-  private[llmdata] def scorePairsGrid(pairs: DataFrame, n: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val p = gridSide(spark)
-    val cells = pairs.select(
-        (pmod(col("src"), lit(p)) * p + pmod(col("dst"), lit(p))).cast("int").as("_1"),
-        col("src").as("_2"), col("dst").as("_3"))
-      .as[(Int, Long, Long)]
-    def replicated(aSide: Boolean) = {
-      val own = pmod(col("vec_id"), lit(p))
-      n.select(col("vec_id"), col("ed"), coalesce(col("nrm"), lit(0.0)).as("nrm"))
-        .withColumn("__o", explode(expr(s"sequence(0, ${p - 1})")))
-        .select(
-          (if (aSide) own * p + col("__o") else col("__o") * p + own).cast("int").as("_1"),
-          lit(if (aSide) 0 else 1).as("_2"),
-          col("vec_id").as("_3"), col("ed").as("_4"), col("nrm").as("_5"))
-        .as[(Int, Int, Long, Array[Double], Double)]
-    }
-    val vecs = replicated(aSide = true).unionByName(replicated(aSide = false))
-    vecs.groupByKey(_._1).cogroup(cells.groupByKey(_._1)) { (_, vit, pit) =>
-      val am = new java.util.HashMap[java.lang.Long, (Array[Double], Double)]()
-      val bm = new java.util.HashMap[java.lang.Long, (Array[Double], Double)]()
-      vit.foreach { v =>
-        if (v._2 == 0) am.put(v._3, (v._4, v._5)) else bm.put(v._3, (v._4, v._5))
-      }
-      pit.flatMap { pr =>
-        val a = am.get(pr._2); val b = bm.get(pr._3)
-        if (a == null || b == null) Iterator.empty // id absent from n: inner joins drop it
-        else if (a._1 == null || b._1 == null || a._1.length != b._1.length)
-          // Row exists but array_dot would be NULL: keep the pair, NULL cos.
-          Iterator.single((pr._2, pr._3, Option.empty[Double]))
-        else {
-          val ea = a._1; val eb = b._1
-          var s = 0.0; var i = 0
-          while (i < ea.length) { s += ea(i) * eb(i); i += 1 }
-          val denom = a._2 * b._2
-          Iterator.single((pr._2, pr._3,
-            if (denom == 0.0) Option.empty[Double] else Some(s / denom)))
-        }
-      }
-    }.toDF("src", "dst", "cos")
+                                  bcast: Boolean = false): DataFrame = {
+    def side(d: DataFrame) = if (bcast) broadcast(d) else d
+    edges
+      .join(side(n.select(col("vec_id").as("src"), col("ed").as("__ea"), col("nrm").as("__na"))), "src")
+      .join(side(n.select(col("vec_id").as("dst"), col("ed").as("__eb"), col("nrm").as("__nb"))), "dst")
+      .select(col("src"), col("dst"),
+        expr(sparkCosPre("__ea", "__eb", "__na", "__nb")).as("cos"))
   }
 
   /** Per-src top-k of scored edges by (cos desc, dst asc) — the
@@ -1836,73 +1724,6 @@ object Similarity {
   private def gridSide(spark: org.apache.spark.sql.SparkSession): Int = {
     val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     math.max(2, math.ceil(math.sqrt(parts * 2.0)).toInt)
-  }
-
-  /** [[scoringShapeChoice]]'s result: which scoring shape moves fewer
-    * exchange bytes, and the per-shape estimates the choice folded. */
-  final case class ScoringShape(choice: String, joinBytes: Long, gridBytes: Long,
-                                seedCandidates: Long, poolPairs: Long)
-
-  /** Stats-driven scoring-shape RECOMMENDATION for [[knnGraph]] — the
-    * design note on [[scorePairsGrid]] executed as a helper: fold a
-    * stored row count into both shapes' estimated exchange volumes and
-    * report which moves fewer bytes. PURE integer arithmetic off
-    * metadata (the [[graft.sources.TableStats.joinStrategyChoice]]
-    * idiom), so the recommendation is auditable and spec-pinned
-    * (ScoringShapeSpec) — no corpus is touched.
-    *
-    * Exchange-byte model (the quantity that walls single boxes and
-    * saturates cluster links; candidate counts from the [[knnBanding]]
-    * occupancy ladder, pool pairs from the NN-Descent k-budget):
-    *  - DEFAULT join shape (bucket-local seed + pivot-local refinement):
-    *    vectors cross attached to STRUCTURE, never to pairs —
-    *    `bands·N·vecBytes` (the co-partitioned band frame) +
-    *    `2k·N·vecBytes` (the pivot frame) + 24 B per scored pair.
-    *  - GRID: vectors replicate P ways per scoring stage
-    *    (`2·P·N·vecBytes`), the band frame crosses WITHOUT vectors
-    *    (~48 B/row with the exactly-once prefix), and every pair crosses
-    *    at 20 B.
-    *
-    * The registered default does NOT auto-switch on this output: the
-    * single-box measurement stands (join 269 s vs grid 340 s at 200 k —
-    * the grid's object-serialized cogroup sort spills where the join's
-    * unsafe-row exchange doesn't), and indeed at the in-engine grid side
-    * P = [[gridSide]](32 partitions) = 8 the byte model already favors
-    * the grid while the wall clock favors the join — bytes are the cost
-    * model of a NETWORK-bound cluster exchange, not of a local spill.
-    * Deployments in that regime read this helper and set `gridScore`
-    * from it, the way [[graft.core.JoinPlanner.autoJoin]] turns
-    * joinStrategyChoice into a plan shape. */
-  def scoringShapeChoice(n: Long, dims: Int, k: Int, gridSideP: Int = 16): ScoringShape = {
-    require(n > 0, s"n must be > 0, got $n")
-    require(dims > 0 && k > 0 && gridSideP > 1,
-      s"bad knobs: dims=$dims k=$k gridSideP=$gridSideP")
-    val (p, r) = knnBanding(n)
-    val bands = (p / r).toLong
-    // ed doubles + nrm + vec_id + row overhead, the unsafe-row shape.
-    val vecBytes = 8L * dims + 28L
-    val occ = math.max(1.0, n.toDouble / (1L << r))
-    val seedCand = math.max(0L, (bands * n * (occ - 1.0) / 2.0).toLong)
-    val poolPairs = n * (2L * k * k + k)
-    val joinBytes = bands * n * vecBytes + 2L * k * n * vecBytes +
-      24L * (seedCand + poolPairs)
-    val gridBytes = 2L * gridSideP * n * vecBytes + 48L * bands * n +
-      20L * (seedCand + poolPairs)
-    ScoringShape(if (gridBytes < joinBytes) "grid" else "join",
-      joinBytes, gridBytes, seedCand, poolPairs)
-  }
-
-  /** [[scoringShapeChoice]] off a STORED stats frame (one
-    * [[graft.sources.TableStats.analyze]] row for the embedding table's
-    * id column carries `n_rows`) — the stats-as-data entry point: the
-    * decision costs one ≤ k-row frame read, never a corpus scan. */
-  def scoringShapeChoice(stats: DataFrame, column: String, dims: Int,
-                         k: Int): ScoringShape = {
-    val rows = stats.filter(col("column") === column)
-      .select("n_rows").collect()
-    require(rows.length == 1,
-      s"scoringShapeChoice: expected exactly 1 stats row for column '$column', found ${rows.length}")
-    scoringShapeChoice(rows(0).getLong(0), dims, k)
   }
 
   /** Grid-blocked exact-cosine pair verify — the 100 TB shape of the

@@ -31,12 +31,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object DocStream {
 
-  /** Adds the BIGINT content fingerprint column (rolling polynomial hash
-    * over token hashes — order-sensitive, whitespace-insensitive). Works on
-    * batch and streaming frames alike; pure per-row projection. Delegates
-    * to the canonical tokenizer + hash ([[TextPrimitives.tokens]],
-    * [[graft.llmdata.TextAnalysis.fingerprintOf]]) so the streaming dedup
-    * key can never drift from the batch fingerprint or its oracle. */
   /** Second-fingerprint parameters — an independent multiplier/modulus so
     * pairing (fingerprint, fingerprint2) gives a ~2^60 joint key space: a
     * single mod-1e9+7 key would birthday-collide within a large watermark
@@ -45,6 +39,12 @@ object DocStream {
   val Fp2Mult = 131L
   val Fp2Mod = 1000000009L
 
+  /** Adds the BIGINT content fingerprint column (rolling polynomial hash
+    * over token hashes — order-sensitive, whitespace-insensitive). Works on
+    * batch and streaming frames alike; pure per-row projection. Delegates
+    * to the canonical tokenizer + hash ([[TextPrimitives.tokens]],
+    * [[graft.llmdata.TextAnalysis.fingerprintOf]]) so the streaming dedup
+    * key can never drift from the batch fingerprint or its oracle. */
   def withFingerprint(docs: DataFrame): DataFrame = {
     graft.functions.VectorExprs.register(docs.sparkSession)
     docs

@@ -130,7 +130,7 @@ class KnnGraphSpec extends AnyFunSuite {
   }
 
   test("no (src,dst) duplicates in either scoring shape (stored-vs-recomputed cosine collapse)") {
-    // The non-grid refinement pool relies on stored cosines being
+    // The refinement pool relies on stored cosines being
     // bit-identical to inline-recomputed ones so duplicate proposals
     // collapse in distinct(); a codegen/kernel divergence on one path
     // would surface here as a duplicated edge inside a node's top-k —
@@ -138,9 +138,9 @@ class KnnGraphSpec extends AnyFunSuite {
     // BOTH shapes so the light/heavy switch can't hide it.
     graft.functions.VectorExprs.register(spark)
     Seq(true, false).foreach { light =>
-      val rows = Similarity.knnGraphShaped(embs, k, planes = 0, bandBits = 0,
-        nHint = 0L, descentRounds = 1, gridScore = false,
-        lightOverride = Some(light)).collect()
+      val rows = Similarity.knnGraphRankedShaped(embs, k, planes = 0, bandBits = 0,
+        nHint = 0L, descentRounds = 1, lightOverride = Some(light))
+        .drop("cos").collect()
         .map(r => (r.getLong(0), r.getLong(2)))
       assert(rows.length == rows.distinct.length,
         s"duplicate (src,dst) edge in ${if (light) "light" else "heavy"} shape")

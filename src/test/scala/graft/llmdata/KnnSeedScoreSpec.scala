@@ -85,8 +85,41 @@ class KnnSeedScoreSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  // Whole-graph seed-shape independence (bucket-local default vs the
-  // gridScore path, which seeds through pairCandIds) is pinned by
-  // KnnGridScoreSpec's "full knnGraph output is identical through either
-  // scoring shape" — not repeated here.
+  // The join form's degenerate-input contract: scoreEdges scores the
+  // light shape's seed and refinement pool, so a NaN here would rank a
+  // zero-norm vector FIRST under Spark's desc order and promote it into
+  // every top-k; NULL ranks last.
+  private def joinScored(rows: Seq[(Long, Array[Float])],
+                         pairs: Seq[(Long, Long)]): Map[Long, Option[Double]] = {
+    import spark.implicits._
+    val zn = Similarity.withNorm(rows.toDF("vec_id", "embedding"))
+    Similarity.scoreEdges(pairs.toDF("src", "dst"), zn)
+      .collect().map(r => r.getLong(1) -> (if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
+  }
+
+  test("join-form scoring: a zero-norm vector gives a NULL cos, never NaN; a well-defined pair still scores") {
+    val j = joinScored(
+      Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 0.0f)), (3L, Array(0.9f, 0.1f))),
+      Seq((1L, 2L), (1L, 3L)))
+    assert(j(2L).isEmpty, "zero-norm cosine must be NULL (Spark's Divide by zero)")
+    assert(j(3L).exists(c => c > 0.9), "well-defined pair must score")
+  }
+
+  test("join-form scoring: null and dimension-mismatched embeddings keep the pair with a NULL cos; an absent id drops") {
+    // 1 = well-formed, 2 = null embedding, 3 = mismatched dimension,
+    // 4 = well-formed partner; pair (1,5) references an absent id.
+    val j = joinScored(
+      Seq((1L, Array(1.0f, 0.0f)), (2L, null.asInstanceOf[Array[Float]]),
+        (3L, Array(0.5f)), (4L, Array(0.6f, 0.8f))),
+      Seq((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L)))
+    assert(j.keySet == Set(2L, 3L, 4L),
+      "join form must keep null/mismatched pairs (NULL cos) and drop only absent ids")
+    assert(j(2L).isEmpty, "null embedding: NULL cos")
+    assert(j(3L).isEmpty, "dimension mismatch: NULL cos")
+    assert(j(4L).isDefined, "well-formed pair scores")
+  }
+
+  // Whole-graph seed-shape independence (the light shape's join-form seed
+  // vs the heavy shape's bucket-local seed) is pinned by KnnShapeGateSpec's
+  // "light ≡ heavy" cases — not repeated here.
 }
